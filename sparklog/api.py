@@ -38,16 +38,19 @@ def parse_lines(df, col: str = "raw",
     """Spark DataFrame with a raw syslog-line column -> the same rows plus
     ``rfc`` and the parsed fields (prefixed ``p_``), via the mapInArrow
     barrier.  Dialect detection is automatic; parse failures surface as
-    ``p_parse_error`` values."""
+    ``p_parse_error`` values.  A token-array ``col`` (see parse_tokens) is
+    replaced by its decoded ``raw`` string."""
     from pyspark.sql import types as T
 
     from .udfs import PARSED_SCHEMA, make_map_in_arrow_parser
 
-    fn = make_map_in_arrow_parser(
-        cfg, passthrough=tuple(df.columns), input_col=col,
-        input_kind="raw", out_prefix="p_", emit_raw=False)
+    is_tokens = not isinstance(df.schema[col].dataType, T.StringType)
+    keep = [f for f in df.schema.fields if not (is_tokens and f.name == col)]
+    fn = make_map_in_arrow_parser(cfg, tuple(f.name for f in keep), col,
+                                  out_prefix="p_")
     schema = T.StructType(
-        list(df.schema.fields)
+        keep
+        + ([T.StructField("raw", T.StringType())] if is_tokens else [])
         + [T.StructField("rfc", T.IntegerType())]
         + [T.StructField(f"p_{f.name}", f.dataType)
            for f in PARSED_SCHEMA.fields])
@@ -61,32 +64,13 @@ def parse_tokens(df, col: str = "tokens",
     is NOT echoed to the output — shipping array<int> back across the
     Arrow boundary costs 10-20x the parse (see udfs.py); the decoded line
     comes back as a ``raw`` string column instead."""
-    from pyspark.sql import types as T
-
-    from .udfs import PARSED_SCHEMA, make_map_in_arrow_parser
-
-    keep = tuple(c for c in df.columns if c != col)
-    fn = make_map_in_arrow_parser(
-        cfg, passthrough=keep, input_col=col,
-        input_kind="tokens", out_prefix="p_")
-    schema = T.StructType(
-        [f for f in df.schema.fields if f.name != col]
-        + [T.StructField("raw", T.StringType()),
-           T.StructField("rfc", T.IntegerType())]
-        + [T.StructField(f"p_{f.name}", f.dataType)
-           for f in PARSED_SCHEMA.fields])
-    return df.mapInArrow(fn, schema)
+    return parse_lines(df, col, cfg)
 
 
 def parse_lines_pandas(lines: pd.Series,
                        cfg: ParseConfig | None = None) -> pd.DataFrame:
     """pandas Series of raw lines -> parsed frame with detection (the
     library surface, no Spark session required)."""
-    from .udfs import parse_syslog_frame
+    from .udfs import parse_pandas
 
-    cfg = cfg or ParseConfig()
-    lines = lines if isinstance(lines, pd.Series) else pd.Series(lines)
-    rfc = detect_rfc(lines)
-    out = parse_syslog_frame(lines, rfc, cfg)
-    out.insert(0, "rfc", rfc.to_numpy())
-    return out
+    return parse_pandas(lines, cfg or ParseConfig())

@@ -6,12 +6,14 @@ Unicode code point of ``raw[i]``.  Syslog bodies are printable US-ASCII
 (RFC5424 PRINTUSASCII), so int32 is ample and round-tripping is exact —
 which makes the routed-row token-array equality audit well-defined.
 
-Two decoder paths:
+Decoders:
 
-* **SQL/JVM path (preferred, codegen'd, no Python):**
-  ``concat_ws('', transform(tokens, t -> char(t)))``
-* **pandas path** for use inside other pandas UDFs: offset-sliced
-  ``np.concatenate`` over the Arrow list values — no per-row Python loops.
+* ``detokenize_arrow`` — the pipeline's decoder, run inside the parse
+  stage's mapInArrow batch function: list<int32> Arrow buffers in,
+  pa.StringArray out, no per-row Python.
+* ``detokenize_col`` — a Spark SQL expression
+  (``concat_ws('', transform(tokens, t -> char(t)))``), used by the
+  ``syslog_token_roundtrip`` query and the round-trip tests.
 """
 
 from __future__ import annotations
@@ -34,57 +36,37 @@ def tokenize_pandas(raw: pd.Series) -> pd.Series:
     )
 
 
-def detokenize_arrow(tokens: pd.Series):
-    """list[int32] code points -> pa.StringArray without per-row Python.
+def detokenize_arrow(col):
+    """list<int32> code points -> pa.StringArray, built straight from the
+    list's offsets and values buffers (no per-row Python objects).
 
-    Flat codepoints -> one utf-32 decode -> one utf-8 encode; per-row BYTE
-    offsets derived vectorially from codepoint widths (1/2/3/4 bytes), so
-    the Arrow string buffer is built in two passes even for non-ASCII.
+    ``col`` may be a slice: its offsets need not start at 0.  All-ASCII
+    batches (syslog is PRINTUSASCII) narrow the code points to bytes and
+    reuse the list offsets; otherwise one utf-32 decode + utf-8 encode
+    builds the data buffer and the byte offsets come from a prefix sum of
+    the per-code-point UTF-8 widths (1/2/3/4 bytes).
     """
     import pyarrow as pa
 
-    lens = np.fromiter((len(t) for t in tokens), dtype=np.int64,
-                       count=len(tokens))
-    if len(lens) == 0:
-        return pa.array([], pa.string())
-    flat = (np.concatenate([np.asarray(t, dtype=np.int32) for t in tokens])
-            if lens.sum() else np.array([], dtype=np.int32))
-
-    byte_offsets = np.zeros(len(lens) + 1, dtype=np.int32)
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    flat = col.values.to_numpy(zero_copy_only=False)[off[0]:off[-1]]
+    rel = off - off[0]
     if len(flat) == 0 or (flat < 0x80).all():
-        # ASCII fast path (syslog is PRINTUSASCII): utf-8 bytes ARE the
-        # codepoints — one narrowing cast, offsets = char offsets
         data = flat.astype(np.uint8).tobytes()
-        np.cumsum(lens, out=byte_offsets[1:])
-        return pa.StringArray.from_buffers(
-            len(lens), pa.py_buffer(byte_offsets.tobytes()),
-            pa.py_buffer(data))
-
-    text = flat.astype("<u4").tobytes().decode("utf-32-le")
-    data = text.encode("utf-8")
-    blen = (1 + (flat >= 0x80).astype(np.int64) + (flat >= 0x800)
-            + (flat >= 0x10000))
-    cum = np.cumsum(blen)
-    ends = np.cumsum(lens)
-    byte_offsets[1:] = np.where(ends > 0, cum[np.maximum(ends - 1, 0)], 0)
-    byte_offsets = np.maximum.accumulate(byte_offsets).astype(np.int32)
+        byte_off = rel
+    else:
+        data = flat.astype("<u4").tobytes().decode("utf-32-le").encode(
+            "utf-8")
+        width = (1 + (flat >= 0x80).astype(np.int64) + (flat >= 0x800)
+                 + (flat >= 0x10000))
+        cum = np.zeros(len(flat) + 1, dtype=np.int64)
+        np.cumsum(width, out=cum[1:])
+        byte_off = cum[rel]
     return pa.StringArray.from_buffers(
-        len(lens), pa.py_buffer(byte_offsets.tobytes()),
+        len(off) - 1, pa.py_buffer(byte_off.astype(np.int32).tobytes()),
         pa.py_buffer(data))
-
-
-def detokenize_pandas(tokens: pd.Series) -> pd.Series:
-    """list[int32] -> str, Arrow-friendly: flatten + single decode + split."""
-    lens = tokens.map(len).to_numpy()
-    if len(lens) == 0:
-        return pd.Series([], dtype=object, index=tokens.index)
-    flat = (np.concatenate([np.asarray(t, dtype=np.int32) for t in tokens])
-            if lens.sum() else np.array([], dtype=np.int32))
-    text = flat.astype("<u4").tobytes().decode("utf-32-le")
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    return pd.Series([text[a:b] for a, b in zip(starts, ends)],
-                     index=tokens.index, dtype=object)
 
 
 # Spark SQL expression for the JVM-side (whole-stage-codegen) decoder.

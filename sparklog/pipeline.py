@@ -2,16 +2,15 @@
 enrich → route (fan-out sinks) → aggregate → audit, with manifest commits
 and resume.
 
-Plan shape (everything except the parse UDF is JVM-side):
+Plan shape (everything except the one MapInArrow is JVM-side):
 
     Scan parquet (pruned: doc_id, tokens, source)
-      → project detokenize (codegen: transform+char)      [no shuffle]
-      → project detect_rfc (codegen)                      [no shuffle]
-      → ArrowEvalPython parse_syslog                      [no shuffle]
+      → MapInArrow: decode + detect + parse, one Python pass per batch
+                                                          [no shuffle]
       → 3× BroadcastHashJoin (dims)                       [no shuffle]
       → salted repartition on sink key                    [the ONE shuffle]
       → dynamic-partition parquet write per sink
-    aggregates/metrics reuse the persisted parse output (partial+final agg).
+    aggregates/metrics re-read the written sinks (partial+final agg).
 
 Usage:  python -m sparklog.pipeline --gen-rows 100000 --out /tmp/slout
 """

@@ -33,8 +33,9 @@ def _interpreted_cosine(df):
 def test_pair_cosine_matches_interpreted_fold(spark):
     """Value equality on non-zero-norm pairs (the only pairs the old
     fold could evaluate at all: under ANSI mode — Spark 4 default — the
-    Catalyst division RAISES on a zero divisor, so every corpus the old
-    fold ever ran green on is zero-norm-free)."""
+    Catalyst division RAISES DIVIDE_BY_ZERO on a zero divisor, double
+    operands included, so every corpus the old fold ever ran green on is
+    zero-norm-free)."""
     from sparklog.queries import _pair_cosine
 
     data = [
@@ -55,7 +56,9 @@ def test_pair_cosine_matches_interpreted_fold(spark):
 def test_pair_cosine_zero_norm_is_nan(spark):
     """Zero-norm pairs get the _brute_topk NaN treatment (the
     interpreted fold they replace would raise under ANSI instead — the
-    kernel is strictly more defined, identical wherever both run)."""
+    kernel is strictly more defined, identical wherever both run).  NaN
+    compares above every number in Spark, so such a pair passes any
+    ``cosine >= threshold`` filter."""
     from sparklog.queries import _pair_cosine
 
     df = spark.createDataFrame(

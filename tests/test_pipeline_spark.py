@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from sparklog import fixtures
 from sparklog.aggregate import hourly_counts
+from sparklog.api import parse_lines_pandas
 from sparklog.encoding import detokenize_col, tokenize_col
 from sparklog.grammar import ParseConfig, detect_rfc, parse_rfc3164, parse_rfc5424
 from sparklog.pipeline import parse_stage, run_pipeline
@@ -62,7 +63,8 @@ def test_goldens_through_pipeline(spark, golden_src):
 
 def test_aggregates_match_pandas_golden(spark, tmp_path):
     """Hour-bucket counts from the Spark pipeline equal an independently
-    computed pandas aggregation over the same synthetic corpus."""
+    computed pandas aggregation over the same synthetic corpus, and the
+    parse stage's rows equal parse_lines_pandas row for row."""
     pdf = fixtures.synth_lines(3000, seed=7)
     src_path = str(tmp_path / "tokens")
     fixtures.write_tokens_table(spark, pdf, src_path, n_partitions=4)
@@ -91,6 +93,19 @@ def test_aggregates_match_pandas_golden(spark, tmp_path):
     assert (got["n"].to_numpy() == exp["n"].to_numpy()).all()
     assert (got["facility"].astype(int).to_numpy()
             == exp["facility"].astype(int).to_numpy()).all()
+
+    # row level: the Spark parse stage equals the pandas surface
+    rows = parsed.drop("raw", "source").orderBy("doc_id").toPandas()
+    want = (parse_lines_pandas(pdf["raw"])
+            .assign(doc_id=pdf["doc_id"].to_numpy())
+            .sort_values("doc_id").reset_index(drop=True))
+    assert len(rows) == len(want)
+    for c in rows.columns:
+        # object-cast first: float columns keep NaN through .where(None)
+        # and NaN != NaN would fail equal frames
+        g = rows[c].astype(object).where(rows[c].notna(), None).tolist()
+        w = want[c].astype(object).where(want[c].notna(), None).tolist()
+        assert g == w, c
 
 
 def test_full_pipeline_and_audit(spark, tmp_path):
@@ -136,35 +151,6 @@ def test_resume_after_kill_is_idempotent(spark, tmp_path):
     out_b = str(tmp_path / "out_b")
     run_pipeline(spark, src_path, out_b, num_partitions=2)
     assert sink_digest(out_a) == sink_digest(out_b)
-
-
-def test_pandas_udf_variant_matches_mapinarrow(spark, tmp_path):
-    """The pandas-UDF tokens parser (kept as an alternative to the
-    mapInArrow default) must produce identical rows."""
-    from pyspark.sql import functions as F
-
-    from sparklog.pipeline import PARSED_COLS, parse_stage
-    from sparklog.udfs import make_parse_from_tokens_udf
-
-    src_path = str(tmp_path / "tokens")
-    fixtures.write_tokens_table(spark, fixtures.synth_lines(800, seed=21),
-                                src_path, n_partitions=2)
-    src = spark.read.parquet(src_path)
-    a = parse_stage(src).drop("raw")
-    udf = make_parse_from_tokens_udf()
-    b = (src.withColumn("parsed", udf(F.col("tokens")))
-            .select("doc_id", "source",
-                    F.col("parsed.rfc").alias("rfc"),
-                    *[F.col(f"parsed.{c}").alias(c) for c in PARSED_COLS]))
-    pa_ = a.orderBy("doc_id").toPandas()
-    pb_ = b.orderBy("doc_id").toPandas()
-    assert pa_.columns.tolist() == pb_.columns.tolist()
-    for c in pa_.columns:
-        # object-cast first: float columns keep NaN through .where(None)
-        # and NaN != NaN would fail equal frames
-        ga = pa_[c].astype(object).where(pa_[c].notna(), None).tolist()
-        gb = pb_[c].astype(object).where(pb_[c].notna(), None).tolist()
-        assert ga == gb, c
 
 
 def test_injected_config_goldens_through_spark(spark, tmp_path):
