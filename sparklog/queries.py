@@ -1065,12 +1065,60 @@ def bucket_split_stats(keyed: DataFrame, key: str, id_col: str, cap: int,
         F.sum((F.col("_bn3") > hard).cast("long")).alias("n_dropped_rows"))
 
 
-# Ordered-pair enumeration within one capped bucket (ids sorted
-# ascending, every (x, y) with x before y — the self-join-free LSH
-# candidate shape) lives in _bucket_pairs' enum_pairs Arrow kernel
-# since round 8; the old interpreted
-# flatten(transform(ids, (x, i) -> transform(slice(ids, i+2, ...))))
-# expression cost ~600 ns/pair.
+# most (a, b) rows _enum_pairs holds or yields at once: 16 MB of int64
+# pairs, whatever the group sizes (a near-cap group alone has ~8.4M)
+_PAIR_BATCH_ROWS = 1 << 20
+
+
+def _enum_pairs(batches, cap: int):
+    """mapInArrow kernel of _bucket_pairs: (ids, _gn, _g) group rows ->
+    (a, b) pair rows.  np.triu_indices over each group's sorted id array
+    emits every (x before y, ids ascending) pair, plus one (group-min,
+    split-min) star edge for each split of a salted group (_gn > cap)
+    whose own min differs.  Output goes out in batches of at most
+    _PAIR_BATCH_ROWS rows: a large group's pairs are sliced, small
+    groups' pairs are gathered across input batches."""
+    import numpy as np
+    import pyarrow as pa
+
+    out_a, out_b, held = [], [], 0
+
+    def flush():
+        return pa.RecordBatch.from_arrays(
+            [pa.array(np.concatenate(out_a)),
+             pa.array(np.concatenate(out_b))], ["a", "b"])
+
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        ids = batch.column("ids")
+        lens = ids.value_lengths().to_numpy(zero_copy_only=False)
+        vals = (ids.flatten().to_numpy(zero_copy_only=False)
+                .astype(np.int64, copy=False))
+        starts = np.concatenate(([0], np.cumsum(lens[:-1])))
+        gn = batch.column("_gn").to_numpy(zero_copy_only=False)
+        g = batch.column("_g").fill_null(-1).to_numpy(zero_copy_only=False)
+        for i in range(batch.num_rows):
+            n = int(lens[i])
+            x = vals[starts[i]:starts[i] + n]
+            pieces = []
+            if n >= 2:
+                ia, ib = np.triu_indices(n, 1)
+                pieces += [(x[ia[s:s + _PAIR_BATCH_ROWS]],
+                            x[ib[s:s + _PAIR_BATCH_ROWS]])
+                           for s in range(0, len(ia), _PAIR_BATCH_ROWS)]
+            # _gm, hence _g, is non-null on every over-cap group
+            if gn[i] > cap and n >= 1 and x[0] != g[i]:
+                pieces.append((np.array([g[i]], dtype=np.int64), x[:1]))
+            for a, b in pieces:
+                if held + len(a) > _PAIR_BATCH_ROWS:
+                    yield flush()
+                    out_a, out_b, held = [], [], 0
+                out_a.append(a)
+                out_b.append(b)
+                held += len(a)
+    if held:
+        yield flush()
 
 
 def _bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int,
@@ -1124,55 +1172,12 @@ def _bucket_pairs(keyed: DataFrame, key: str, id_col: str, cap: int,
                       .agg(F.sort_array(F.collect_set("_id")).alias("ids"),
                            F.max("_bn2").alias("_gn"),
                            F.min("_gm").alias("_g")))
-    # pair enumeration runs in a numpy mapInArrow kernel (round-8): the
-    # previous flatten(transform(ids, (x, i) -> transform(slice(...))))
-    # was evaluated by the interpreted HOF path at ~600 ns per pair —
-    # the dominant cost of every duplication-heavy pair stage (x100
-    # ann_lsh_candidate_pairs spent ~30 s of 32 s there).  np.triu_indices
-    # over each group's sorted id array emits the IDENTICAL (x before y,
-    # ids ascending) pair set, plus the same (group-min, split-min) star
-    # edge for salted splits; per-group memory is bounded by the hard cap
-    # (<= (cap*factor)^2/2 int64 pairs).
+    # per-group memory of the _enum_pairs kernel is bounded by the hard
+    # cap (<= (cap*factor)^2/2 int64 pairs), its output by _PAIR_BATCH_ROWS
     src = (grouped.where((F.size("ids") >= 2) | (F.col("_gn") > cap))
                   .select("ids", "_gn", "_g"))
-
-    def enum_pairs(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            rows = batch.num_rows
-            if rows == 0:
-                continue
-            ids = batch.column("ids")
-            lens = ids.value_lengths().to_numpy(zero_copy_only=False)
-            vals = (ids.flatten().to_numpy(zero_copy_only=False)
-                    .astype(np.int64, copy=False))
-            starts = np.concatenate(([0], np.cumsum(lens[:-1])))
-            gn = batch.column("_gn").to_numpy(zero_copy_only=False)
-            g = batch.column("_g").fill_null(-1).to_numpy(
-                zero_copy_only=False)
-            out_a, out_b = [], []
-            for i in range(rows):
-                n = int(lens[i])
-                x = vals[starts[i]:starts[i] + n]
-                if n >= 2:
-                    ia, ib = np.triu_indices(n, 1)
-                    out_a.append(x[ia])
-                    out_b.append(x[ib])
-                # star edge: same condition as the old Catalyst branch
-                # (_gn > cap AND ids[1] != _g); _gm is non-null on every
-                # over-cap group by construction
-                if gn[i] > cap and n >= 1 and x[0] != g[i]:
-                    out_a.append(np.array([g[i]], dtype=np.int64))
-                    out_b.append(x[:1])
-            if not out_a:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_a)),
-                 pa.array(np.concatenate(out_b))], ["a", "b"])
-
-    pairs = src.mapInArrow(enum_pairs, "a bigint, b bigint")
+    pairs = src.mapInArrow(lambda it: _enum_pairs(it, cap),
+                           "a bigint, b bigint")
     return pairs if unique_keys else pairs.distinct()
 
 
@@ -2205,6 +2210,74 @@ def dedup_path_metrics(spark, sf, cc_stats: dict | None = None
     return out.unionByName(sub_row).unionByName(cc_row)
 
 
+# --- numeric core of the vector kernels -----------------------------------
+# The Arrow kernels read, fold and round every cosine, norm and hyperplane
+# dot through the four functions below, so bit parity with the DuckDB
+# oracle (list_sum folds, round()) is decided in one place.
+def _emb_matrix(col, d: int | None = None):
+    """list<float|double> Arrow array -> contiguous (rows, d) float64
+    matrix.  Raises ValueError on mixed lengths, or on a length other
+    than ``d`` when one is required."""
+    import numpy as np
+
+    lens = col.value_lengths().to_numpy(zero_copy_only=False)
+    want = (int(lens[0]) if len(lens) else 0) if d is None else d
+    if not (lens == want).all():
+        raise ValueError(f"ragged embedding column (need length {want})")
+    return (col.flatten().to_numpy(zero_copy_only=False)
+            .astype(np.float64, copy=False).reshape(len(lens), want))
+
+
+def _fold_dot(A, B):
+    """sum_j A[..., j] * B[..., j], broadcast over the leading axes and
+    accumulated LEFT TO RIGHT over j — the IEEE addition order of the
+    oracle's list_sum and of Spark's aggregate() fold, NOT numpy's
+    pairwise-summation dot, whose different rounding could flip a
+    near-tie.  Shapes: V[:, None, :] x W[None, :, :] for cross products,
+    A x B for row-wise pairs, X x X for squared norms."""
+    import numpy as np
+
+    acc = np.zeros(np.broadcast_shapes(A.shape[:-1], B.shape[:-1]))
+    for j in range(A.shape[-1]):
+        acc += A[..., j] * B[..., j]
+    return acc
+
+
+def _round(x, ndigits: int):
+    """round(x, ndigits) as DuckDB computes it: the scaled double x*10^n
+    rounded half AWAY from zero, then divided back (np.round rounds half
+    to even: 0.03125 -> 0.0312, where DuckDB and Spark give 0.0313).
+    Spark's round goes through the shortest decimal string instead, so
+    the two engines part only where x*10^n is not the decimal's tie
+    (0.00015 at 4 digits: DuckDB 0.0001, Spark 0.0002); this follows the
+    DuckDB oracle.  NaN and +-inf pass through."""
+    import numpy as np
+
+    s = 10.0 ** ndigits
+    y = np.asarray(x, dtype=np.float64) * s
+    r = np.trunc(y)
+    return (r + np.where(np.abs(y - r) >= 0.5, np.sign(y), 0.0)) / s
+
+
+def _cosine_sweep(V, W, nw, ndigits: int):
+    """Rounded cosines of every row of V (rows, d) against every row of
+    W (cells, d), whose norms are nw, yielded as (row slice, squared row
+    norms, (chunk, cells) cosines).  The score matrix is row-CHUNKED to
+    ~64 MB whatever the batch or sample size (10k rows x 64k cells would
+    be ~5 GB); rows are independent, so chunking changes no IEEE fold.
+    A zero norm on either side gives NaN (0/0); callers mask it."""
+    import numpy as np
+
+    chunk = max(1, (64 << 20) // (8 * max(W.shape[0], 1)))
+    for s0 in range(0, V.shape[0], chunk):
+        Vc = V[s0:s0 + chunk]
+        nv = _fold_dot(Vc, Vc)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            cs = _round(_fold_dot(Vc[:, None, :], W[None, :, :])
+                        / (np.sqrt(nv)[:, None] * nw[None, :]), ndigits)
+        yield slice(s0, s0 + Vc.shape[0]), nv, cs
+
+
 def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
     """Brute-force cosine top-k: q (query_id, qv) — bounded by design,
     every caller passes a small audit sample — is collected once and
@@ -2212,12 +2285,8 @@ def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
     The corpus stays partition-local (never shuffles), and each Arrow
     batch emits only its LOCAL top-k rows per query, so the final
     ranking window sees ~batches*k*|q| candidate rows instead of
-    |c|*|q| (round-6 judge item #6: the previous formulation broadcast-
-    cross-joined and evaluated an interpreted Catalyst
-    aggregate(zip_with(...)) fold per element; this reuses the numpy
-    fold the IVF kernel already trusts for bit-exact oracle parity —
-    per-dimension left-to-right accumulation, the same IEEE addition
-    sequence as DuckDB's list_sum, NOT numpy's pairwise dot).
+    |c|*|q|.  Scores come from _cosine_sweep: bit-identical to the
+    oracle's list_sum fold.
 
     Similarity is the ROUNDED (4 dp) cosine with a neighbor_id tiebreak
     so both engines rank identically.  Zero-norm pairs produce NaN
@@ -2237,10 +2306,7 @@ def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
     Q = np.array([r.qv for r in qrows], dtype=np.float64)     # (m, d)
     qids = np.array([r.query_id for r in qrows], dtype=np.int64)
     m, dq = Q.shape
-    nq = np.zeros(m)
-    for j in range(dq):                     # left-to-right norm fold
-        nq += Q[:, j] * Q[:, j]
-    nq = np.sqrt(nq)
+    nq = np.sqrt(_fold_dot(Q, Q))
 
     def score(batches):
         import pyarrow as pa
@@ -2249,21 +2315,8 @@ def _brute_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
             rows = batch.num_rows
             if rows == 0:
                 continue
-            v = batch.column("v")
-            lens = v.value_lengths().to_numpy()
-            d = int(lens[0])
-            if not (lens == d).all() or d != dq:
-                raise ValueError("ragged embedding column")
-            V = (v.flatten().to_numpy(zero_copy_only=False)
-                  .astype(np.float64, copy=False).reshape(rows, d))
-            acc = np.zeros((rows, m))
-            nv = np.zeros(rows)
-            for j in range(d):              # oracle's list_sum fold
-                acc += V[:, j:j + 1] * Q[:, j][None, :]
-                nv += V[:, j] * V[:, j]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cs = np.round(acc / (np.sqrt(nv)[:, None] * nq[None, :]),
-                              4)
+            V = _emb_matrix(batch.column("v"), dq)
+            cs = np.vstack([x for _, _, x in _cosine_sweep(V, Q, nq, 4)])
             ids = batch.column("neighbor_id").to_numpy()
             key = np.where(np.isnan(cs), np.inf, cs)
             t = min(k, rows)
@@ -2296,53 +2349,32 @@ def _pair_cosine(df: DataFrame, ida: str, idb: str, va: str, vb: str,
     candidate-verification stage (ann_ivf_topk probe scoring,
     ann_lsh_near_pairs, dedup_embedding_cosine).
 
-    Replaces the interpreted Catalyst aggregate(zip_with(...)) fold those
-    stages evaluated per row — O(d) interpreter steps per (dot, na, nb)
-    fold per pair, the exact construct rounds 3/6/7 already excised from
-    IVF assignment and _brute_topk.  Bit-parity with the DuckDB oracle:
-    dot and both norms accumulate per-dimension LEFT-TO-RIGHT (the same
-    IEEE addition sequence as list_sum and as the interpreted fold this
-    replaces — NOT numpy's pairwise dot), then round(x, ndigits).
+    Bit-parity with the DuckDB oracle: dot and both norms are
+    _fold_dot's left-to-right folds (the IEEE addition sequence of
+    list_sum and of Spark's aggregate() fold), then _round(x, ndigits).
     Zero-norm pairs produce NaN (0/0, the _brute_topk treatment), and
     NaN compares above every number in Spark, so a NaN cosine PASSES
     ``>=`` threshold filters downstream.  The interpreted Catalyst
     division never yields NaN here: under ANSI mode (Spark 4 default) it
     raises DIVIDE_BY_ZERO for double operands too (checked on Spark
     4.1.2), and with ANSI off it yields NULL.  No gate corpus contains
-    zero-norm vectors, or the old fold would have crashed, and
-    ann_ivf_topk's sentinel filter excludes them structurally — so on
-    every corpus both folds ever see, results are bit-identical."""
+    zero-norm vectors, and ann_ivf_topk's sentinel filter excludes them
+    structurally — so wherever the interpreted fold runs at all, both
+    agree bit for bit."""
     import numpy as np
 
     def score(batches):
         import pyarrow as pa
 
         for batch in batches:
-            rows = batch.num_rows
-            if rows == 0:
+            if batch.num_rows == 0:
                 continue
-            mats = []
-            for name in (va, vb):
-                col = batch.column(name)
-                lens = col.value_lengths().to_numpy()
-                d = int(lens[0])
-                if not (lens == d).all():
-                    raise ValueError("ragged embedding column")
-                mats.append(col.flatten().to_numpy(zero_copy_only=False)
-                            .astype(np.float64, copy=False)
-                            .reshape(rows, d))
-            A, B = mats
-            if A.shape[1] != B.shape[1]:
-                raise ValueError("embedding dimension mismatch")
-            acc = np.zeros(rows)
-            na = np.zeros(rows)
-            nb = np.zeros(rows)
-            for j in range(A.shape[1]):     # oracle's list_sum fold
-                acc += A[:, j] * B[:, j]
-                na += A[:, j] * A[:, j]
-                nb += B[:, j] * B[:, j]
+            A = _emb_matrix(batch.column(va))
+            B = _emb_matrix(batch.column(vb), A.shape[1])
             with np.errstate(invalid="ignore", divide="ignore"):
-                cs = np.round(acc / (np.sqrt(na) * np.sqrt(nb)), ndigits)
+                cs = _round(_fold_dot(A, B) / (np.sqrt(_fold_dot(A, A))
+                                               * np.sqrt(_fold_dot(B, B))),
+                            ndigits)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(ida), batch.column(idb), pa.array(cs)],
                 [ida, idb, "cosine"])
@@ -2357,9 +2389,7 @@ def ann_cosine_topk(spark, sf):
     """Brute-force cosine top-5: query vectors (vec_id<10) vs the corpus
     (the _brute_topk kernel — broadcast query side, corpus never
     shuffles)."""
-    e = _t(spark, sf, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        F.expr("transform(embedding, x -> cast(x as double))").alias("v"))
+    e = _embeddings_v(spark, sf)
     q = e.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     c = e.where(F.col("vec_id") >= 10).select(
@@ -2973,23 +3003,15 @@ _W_DUCK = ("list_transform(generate_series(0, 63), i -> "
 def _lsh_signatures(e: DataFrame, id_col: str = "vec_id",
                     vcol: str = "v") -> DataFrame:
     """(id, v) -> (id, sig): the FULL _LSH_MAX_PLANES-bit hyperplane
-    sign signature in ONE numpy mapInArrow pass (round-8).
-
-    The previous per-bit Catalyst expression — one interpreted
-    aggregate(zip_with(v, W_k, ...)) fold per plane per row — cost
-    ~2.3 s per plan branch at x100 for just the 9 bucket planes, and
-    every probe/join of the cap cascade keyed on the bucket re-evaluated
-    it in its own branch (~5 branches), with the 23 refine planes on
-    top of that.  One kernel pass computes all 32 bits; bucket and
-    refine keys become SUBSTRINGS of the materialized sig — exactly the
-    oracle's formulation (full signature, then substr prefix), so the
-    engine-side key construction now mirrors the SQL text instead of
-    re-deriving each bit range.
+    sign signature in ONE numpy mapInArrow pass.  Bucket and refine keys
+    are SUBSTRINGS of the materialized sig — exactly the oracle's
+    formulation (full signature, then substr prefix) — so every probe
+    and join of the cap cascade reuses one kernel pass.
 
     Bit parity: weights are the same integer-derived
     ((k*73856093 + i*19349663) % 2001 - 1000)/1000.0 doubles as
-    _W_DUCK (int64 arithmetic, no overflow); each plane's dot folds
-    left-to-right per dimension — the interpreted fold's IEEE addition
+    _W_DUCK (int64 arithmetic, no overflow); each plane's dot is a
+    _fold_dot left-to-right fold — the oracle's list_sum IEEE addition
     order — and the sign test emits '1' unless acc < 0, so a NaN fold
     orders ABOVE zero exactly as Spark's and DuckDB's NaN comparison
     semantics do."""
@@ -3006,16 +3028,8 @@ def _lsh_signatures(e: DataFrame, id_col: str = "vec_id",
             rows = batch.num_rows
             if rows == 0:
                 continue
-            v = batch.column(vcol)
-            lens = v.value_lengths().to_numpy()
-            d = int(lens[0])
-            if not (lens == d).all() or d != 64:
-                raise ValueError("ragged or non-64-dim embedding column")
-            V = (v.flatten().to_numpy(zero_copy_only=False)
-                 .astype(np.float64, copy=False).reshape(rows, d))
-            acc = np.zeros((rows, _LSH_MAX_PLANES))
-            for j in range(d):          # left-to-right fold per plane
-                acc += V[:, j:j + 1] * W[:, j][None, :]
+            V = _emb_matrix(batch.column(vcol), 64)
+            acc = _fold_dot(V[:, None, :], W[None, :, :])
             codes = np.where(acc < 0, 48, 49).astype(np.uint8)  # '0'/'1'
             buf = codes.tobytes()
             n = _LSH_MAX_PLANES
@@ -3054,6 +3068,10 @@ def _embeddings_v(spark, sf) -> DataFrame:
     return _t(spark, sf, "embeddings").select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.expr("transform(embedding, x -> cast(x as double))").alias("v"))
+
+
+# squared norm of the v column; "> 0" keeps the vectors that have a cosine
+_V_SUMSQ = "aggregate(transform(v, x -> x * x), 0D, (acc, x) -> acc + x)"
 
 
 def ann_lsh_buckets(spark, sf):
@@ -3225,17 +3243,18 @@ def _ivf_codebook(e: DataFrame, nlist: int):
     non-empty cell to the member mean, empty cells keep their centroid.
 
     Bit-parity with the oracle CTEs: every float fold is left-to-right —
-    dot/norm accumulate per-dimension (same order as list_sum), the
-    member sum accumulates in vec_id-ascending order (the oracle's
+    dot/norm are _fold_dot folds (same order as list_sum), the member
+    sum accumulates in vec_id-ascending order (the oracle's
     list(v ORDER BY vec_id) fold), and the mean divides by count as a
     double.  Scale shape: sort+limit is TakeOrderedAndProject (no full
-    shuffle), the sample is <= 64 MB on the driver, and the Lloyd loop
-    is numpy over the sample only — the corpus never participates."""
+    shuffle), the sample is <= 64 MB on the driver, the assign step's
+    cosine matrix is _cosine_sweep-chunked (128k sample x 64k cells
+    would be ~64 GB whole), and the Lloyd loop is numpy over the sample
+    only — the corpus never participates."""
     import numpy as np
 
-    sq = "aggregate(transform(v, x -> x * x), 0D, (acc, x) -> acc + x)"
     s_cap = min(nlist * _IVF_SAMPLE_FACTOR, _IVF_MAX_SAMPLE)
-    rows = (e.where(F.expr(sq) > 0)
+    rows = (e.where(F.expr(_V_SUMSQ) > 0)
              .select("vec_id", "v",
                      F.md5(F.col("vec_id").cast("string")).alias("h"))
              .sort("h", "vec_id").limit(s_cap).collect())
@@ -3243,30 +3262,12 @@ def _ivf_codebook(e: DataFrame, nlist: int):
     ids = np.array([r.vec_id for r in rows])
     W = V[:nlist].copy()
     order = np.argsort(ids, kind="stable")
-    # the assign step's (rows x nlist) cosine matrix is computed in row
-    # CHUNKS bounded to ~64 MB: at the documented caps (128k sample x
-    # 64k cells) one full matrix would be ~64 GB of driver heap (round-4
-    # advisor).  Rows are independent, so chunking changes no IEEE fold —
-    # per-row results are bit-identical to the whole-matrix sweep.
-    chunk = max(1, (64 << 20) // (8 * max(W.shape[0], 1)))
     for _ in range(_IVF_LLOYD_ITERS):
-        ncv = np.zeros(W.shape[0])
-        for j in range(W.shape[1]):
-            ncv += W[:, j] * W[:, j]
-        ncv = np.sqrt(ncv)
-        safe_ncv = np.where(ncv == 0.0, 1.0, ncv)
+        ncv = np.sqrt(_fold_dot(W, W))
         b = np.empty(V.shape[0], dtype=np.int64)
-        for s0 in range(0, V.shape[0], chunk):
-            Vc = V[s0:s0 + chunk]
-            acc = np.zeros((Vc.shape[0], W.shape[0]))
-            nv = np.zeros(Vc.shape[0])
-            for j in range(V.shape[1]):
-                acc += Vc[:, j:j + 1] * W[:, j][None, :]
-                nv += Vc[:, j] * Vc[:, j]
-            cs = np.round(acc / (np.sqrt(nv)[:, None]
-                                 * safe_ncv[None, :]), 6)
-            cs[:, ncv == 0.0] = -np.inf
-            b[s0:s0 + chunk] = np.argmax(cs, axis=1)
+        for sl, _nv, cs in _cosine_sweep(V, W, ncv, 6):
+            cs[:, ncv == 0.0] = -np.inf     # NULL-cosine cells never win
+            b[sl] = np.argmax(cs, axis=1)
         newW = np.zeros_like(W)
         counts = np.zeros(W.shape[0], dtype=np.int64)
         for idx in order:            # vec_id-ascending member fold
@@ -3285,40 +3286,28 @@ def _ivf_two(e: DataFrame, W) -> DataFrame:
     ROW-LOCAL by construction: scoring any SUBSET of e yields exactly
     the rows that subset would get from a full pass, which is what lets
     ann_ivf_topk compute the query probe cells on just the (pre-kernel
-    filtered) probe vectors instead of running a second full-corpus
-    assignment pass (round-8 — the previous plan's query branch ran the
-    kernel over all N rows and filtered vec_id above it, because a
-    filter can never push below an opaque map).
+    filtered) probe vectors — a filter can never push below an opaque
+    map, so a full-corpus pass would otherwise run a second time.
 
     Scale shape: the codebook (built once on the driver by _ivf_codebook,
     bounded by _IVF_MAX_CELLS x 64 doubles = 32 MB) ships to executors
-    inside an Arrow kernel closure; each batch computes all N x nlist
-    cosines as
-    numpy column sweeps.  Nothing row-expanding ever happens: the old-old
-    formulation cross-joined e x cents into N*nlist ROWS (N^1.5 at
-    nlist=sqrt(N)); the round-2 in-row Catalyst aggregate avoided that
-    but evaluated an interpreted higher-order fold per element —
-    O(N * nlist * d) interpreter steps, 141 s for 200k x 448 x 64 where
-    this kernel takes ~2 s.  Dense codebook scoring is exactly the
-    "built-ins genuinely can't express it efficiently" case for an
-    Arrow-batched kernel.
+    inside an Arrow kernel closure; each batch scores its rows against
+    every cell with _cosine_sweep (row-chunked to ~64 MB per task).
+    Nothing row-expanding ever happens — no e x cents cross join — and
+    dense codebook scoring is exactly the "built-ins genuinely can't
+    express it efficiently" case for an Arrow-batched kernel.
 
-    Bit-parity with the DuckDB oracle: the dot/norm accumulations run as
-    an explicit loop over dimensions (acc += v[:,j] * w[j,:]), which is
-    the same left-to-right IEEE addition sequence as the oracle's
-    list_sum fold — NOT numpy's pairwise-summation dot, whose different
-    rounding could flip a near-tie argmax.  Scores are rounded to 6
-    decimals before the top-2 selection, same as the oracle; ties break
-    to the lowest cell id (argmax-first over a cell-ascending codebook).
+    Bit-parity with the DuckDB oracle: dot and norms are _fold_dot's
+    left-to-right folds (the list_sum IEEE addition sequence, NOT
+    numpy's pairwise dot, whose different rounding could flip a near-tie
+    argmax).  Scores are _round-ed to 6 decimals before the top-2
+    selection, same as the oracle; ties break to the lowest cell id
+    (argmax-first over a cell-ascending codebook).
     """
     import numpy as np
 
     W = np.asarray(W, dtype=np.float64)          # (nlist, d)
-    cells = np.arange(W.shape[0], dtype=np.int32)
-    ncv = np.zeros(W.shape[0])
-    for j in range(W.shape[1]):
-        ncv += W[:, j] * W[:, j]
-    ncv = np.sqrt(ncv)
+    ncv = np.sqrt(_fold_dot(W, W))
 
     def score(batches):
         import pyarrow as pa
@@ -3327,49 +3316,26 @@ def _ivf_two(e: DataFrame, W) -> DataFrame:
             rows = batch.num_rows
             if rows == 0:
                 continue
-            v = batch.column("v")
-            lens = v.value_lengths().to_numpy()
-            d = int(lens[0])
-            if not (lens == d).all():
-                raise ValueError("ragged embedding column")
-            V = (v.flatten().to_numpy(zero_copy_only=False)
-                  .astype(np.float64, copy=False).reshape(rows, d))
-            # row-chunked cosine sweep: bounds the (rows x nlist) score
-            # matrix to ~64 MB per task regardless of Arrow batch size
-            # (a 10k-row batch x 64k cells would otherwise be ~5 GB).
-            # Rows are independent — chunking changes no IEEE fold.
-            chunk = max(1, (64 << 20) // (8 * max(W.shape[0], 1)))
+            V = _emb_matrix(batch.column("v"), W.shape[1])
             zero = np.empty(rows, dtype=bool)
             b1 = np.empty(rows, dtype=np.int64)
             b2 = np.empty(rows, dtype=np.int64)
             c1 = np.empty(rows)
-            for s0 in range(0, rows, chunk):
-                Vc = V[s0:s0 + chunk]
-                rc = Vc.shape[0]
-                acc = np.zeros((rc, W.shape[0]))
-                nv = np.zeros(rc)
-                for j in range(d):
-                    acc += Vc[:, j:j + 1] * W[:, j][None, :]
-                    nv += Vc[:, j] * Vc[:, j]
-                # zero-norm rows would divide 0/0 -> NaN scores and an
-                # arbitrary argmax; mask them to the NULL-cosine sentinel
-                # cell instead (ADVICE r3), matching the oracle's NULL
-                # propagation
-                zc = nv == 0.0
-                cs = np.round(
-                    acc / (np.sqrt(np.where(zc, 1.0, nv))[:, None]
-                           * np.where(ncv == 0.0, 1.0, ncv)[None, :]), 6)
+            for sl, nv, cs in _cosine_sweep(V, W, ncv, 6):
+                # zero-norm rows score NaN everywhere (0/0) and would take
+                # an arbitrary argmax; they go to the NULL-cosine sentinel
+                # cell below instead (ADVICE r3), matching the oracle's
+                # NULL propagation
                 cs[:, ncv == 0.0] = -np.inf  # NULL-cosine cells never win
+                r = np.arange(cs.shape[0])
                 bc1 = np.argmax(cs, axis=1)
-                c1[s0:s0 + chunk] = cs[np.arange(rc), bc1]
-                cs[np.arange(rc), bc1] = -np.inf
-                b2[s0:s0 + chunk] = np.argmax(cs, axis=1)
-                b1[s0:s0 + chunk] = bc1
-                zero[s0:s0 + chunk] = zc
-            cell1 = np.where(zero, _IVF_SENTINEL_CELL,
-                             cells[b1]).astype(np.int32)
-            cell2 = np.where(zero, _IVF_SENTINEL_CELL,
-                             cells[b2]).astype(np.int32)
+                c1[sl] = cs[r, bc1]
+                cs[r, bc1] = -np.inf
+                b2[sl] = np.argmax(cs, axis=1)
+                b1[sl] = bc1
+                zero[sl] = nv == 0.0
+            cell1 = np.where(zero, _IVF_SENTINEL_CELL, b1).astype(np.int32)
+            cell2 = np.where(zero, _IVF_SENTINEL_CELL, b2).astype(np.int32)
             yield pa.RecordBatch.from_arrays(
                 [batch.column("vec_id"), batch.column("v"),
                  pa.array(cell1), pa.array(c1, mask=zero),
@@ -3628,9 +3594,7 @@ def ann_recall_report(spark, sf):
     unclusterable.  Real embedding corpora cluster; this report is
     exactly what tunes nlist/nprobe against them."""
     e = _embeddings_v(spark, sf)
-    norm_v = F.expr("sqrt(aggregate(transform(v, x -> x * x), 0D, "
-                    "(acc, x) -> acc + x))")
-    base = e.where(norm_v > 0)
+    base = e.where(F.expr(_V_SUMSQ) > 0)
     q = base.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     c = base.where(F.col("vec_id") >= 20).select(
@@ -3716,7 +3680,6 @@ def dedup_embedding_cosine(spark, sf):
     # is NULL in the oracle (0/0) and therefore excluded there too.
     # Without this, the x100 corpus (200 copies per vector) spent minutes
     # verifying ~40M identical pairs one interpreted dot at a time.
-    sq = "aggregate(transform(v, x -> x * x), 0D, (acc, x) -> acc + x)"
     # group key = two independent xxhash64s over the raw double array
     # (128 combined bits — collision-safe at 10^12 rows, where a single
     # 64-bit key would already see birthday collisions and emit false
@@ -3728,14 +3691,14 @@ def dedup_embedding_cosine(spark, sf):
     # constraint applies to it.
     gk = F.concat(F.hex(F.xxhash64("v")),
                   F.hex(F.xxhash64(F.lit(1), F.col("v"))))
-    keyed = aug.where(F.expr(sq) > 0).select(gk.alias("gk"), "vec_id")
+    keyed = aug.where(F.expr(_V_SUMSQ) > 0).select(gk.alias("gk"), "vec_id")
     # the representative VECTOR rides through the collapse aggregation
     # (min_by): partial agg ships one candidate vector per key per task,
     # so volume is bounded by the UNIQUE count — re-joining the corpus
     # by rep id instead shuffled all 400k vectors to fetch 2k rows
     # (measured 21 s of this query's x100 time), and broadcasting the
     # rep list would cap out at web-scale unique counts
-    grp_v = (aug.where(F.expr(sq) > 0)
+    grp_v = (aug.where(F.expr(_V_SUMSQ) > 0)
                 .groupBy(gk.alias("gk"))
                 .agg(F.min("vec_id").alias("rep"),
                      F.min_by("v", "vec_id").alias("v")))
@@ -3763,8 +3726,6 @@ def dedup_embedding_cosine(spark, sf):
 
     va = reps.select(F.col("vec_id").alias("rep_a"), F.col("v").alias("va"))
     vb = reps.select(F.col("vec_id").alias("rep_b"), F.col("v").alias("vb"))
-    # verification via the shared _pair_cosine Arrow kernel (round-8:
-    # previously an interpreted aggregate(zip_with(...)) fold per pair)
     rep_pairs = (_pair_cosine(cand.join(va, "rep_a").join(vb, "rep_b"),
                               "rep_a", "rep_b", "va", "vb", 4)
                  .where(F.col("cosine") >= 0.99))

@@ -523,3 +523,49 @@ def test_cascade_closure_equals_uncapped_closure_randomized(spark):
         max_pairs += splits * (min(per_split + cap, hard) ** 2) // 2 \
             + splits
     assert len(pairs) <= max_pairs
+
+
+def test_enum_pairs_batches_are_bounded():
+    """The pair-enumeration kernel yields batches of at most
+    _PAIR_BATCH_ROWS rows — a ~2048-id group alone has ~2.1M pairs — and
+    their concatenation is exactly the unbounded enumeration: every
+    ascending within-group pair plus the (group-min, split-min) star edge
+    of each salted split whose own min differs."""
+    import numpy as np
+    import pyarrow as pa
+
+    from sparklog.queries import LSH_BUCKET_CAP, _PAIR_BATCH_ROWS, _enum_pairs
+
+    cap = LSH_BUCKET_CAP
+    schema = pa.schema([("ids", pa.list_(pa.int64())), ("_gn", pa.int64()),
+                        ("_g", pa.int64())])
+    big = list(range(10, 10 + 2 * cap))        # salted group's min split
+    salted = list(range(5000, 5000 + 300))     # another split of it
+    groups = [([1, 2, 3], 3, None), (big, 5 * cap, 10),
+              (salted, 5 * cap, 10), ([7000], 5 * cap, 10), ([8, 9], 2, 8)]
+
+    def batch(rows):
+        return pa.RecordBatch.from_pydict(
+            {"ids": [r[0] for r in rows], "_gn": [r[1] for r in rows],
+             "_g": [r[2] for r in rows]}, schema=schema)
+
+    out = list(_enum_pairs(iter([batch(groups[:2]), batch([]),
+                                 batch(groups[2:])]), cap))
+    assert len(out) >= 3
+    assert all(b.num_rows <= _PAIR_BATCH_ROWS for b in out)
+    got = np.stack([np.concatenate([b.column(c).to_numpy() for b in out])
+                    for c in ("a", "b")])
+
+    ea, eb = [], []
+    for ids, gn, g in groups:
+        x = np.array(ids, dtype=np.int64)
+        ea += [np.repeat(x[:-1], np.arange(len(x) - 1, 0, -1))]
+        eb += [x[j + 1:] for j in range(len(x) - 1)]
+        if gn > cap and x[0] != g:
+            ea.append(np.array([g]))
+            eb.append(x[:1])
+    exp = np.stack([np.concatenate(ea), np.concatenate(eb)])
+    assert exp.shape[1] == sum(len(i) * (len(i) - 1) // 2
+                               for i, _, _ in groups) + 2
+    assert np.array_equal(got[:, np.lexsort(got[::-1])],
+                          exp[:, np.lexsort(exp[::-1])])

@@ -95,3 +95,44 @@ def test_ivf_two_is_row_local(spark):
            for r in _ivf_two(e.where(F.col("vec_id") < 20), W).collect()}
     assert sub == {k: v for k, v in full.items() if k < 20}
     assert len(sub) == 20
+
+
+# ties at 4 / 6 digits, where np.round (half to even) and the engines'
+# round (half away from zero) disagree, plus non-ties
+_TIES = {4: [0.03125, -0.03125, 0.00005, -0.00005, 0.12345, 0.00025,
+             0.5, -0.99995, 0.0001],
+         6: [0.0000005, -0.0000005, 0.1234565, 0.0000025, 0.2500005,
+             0.9999995]}
+
+
+def test_round_matches_spark_and_duckdb_on_ties(spark):
+    import duckdb
+
+    from sparklog.queries import _round
+
+    con = duckdb.connect()
+    for nd, vals in _TIES.items():
+        df = spark.createDataFrame([(v,) for v in vals], "x double")
+        sp = [r.r for r in df.select(F.round("x", nd).alias("r")).collect()]
+        dk = [con.execute(f"SELECT round(?::DOUBLE, {nd})", [v]).fetchone()[0]
+              for v in vals]
+        got = [float(_round(v, nd)) for v in vals]
+        assert got == sp == dk, (nd, vals, got, sp, dk)
+    # where the engines part (0.00015 * 1e4 = 1.4999999999999998 as a
+    # double, but "0.00015" is a decimal tie for Spark), follow the oracle
+    assert float(_round(0.00015, 4)) == con.execute(
+        "SELECT round(0.00015::DOUBLE, 4)").fetchone()[0] == 0.0001
+
+
+def test_pair_cosine_rounds_ties_like_spark(spark):
+    """cosine(e1, ones(1024)) is exactly 1/32 = 0.03125: the kernel must
+    give Spark's (and DuckDB's) 0.0313, not half-to-even 0.0312."""
+    from sparklog.queries import _pair_cosine
+
+    e1 = [1.0] + [0.0] * 1023
+    df = spark.createDataFrame(
+        [(1, 2, e1, [1.0] * 1024)],
+        "a bigint, b bigint, va array<double>, vb array<double>")
+    [r] = _pair_cosine(df, "a", "b", "va", "vb", 4).collect()
+    [ref] = _interpreted_cosine(df).collect()
+    assert r.cosine == ref.cosine == 0.0313
