@@ -27,6 +27,8 @@ SEVERITY_CLASS = ["crit", "crit", "crit", "crit", "warn", "warn",
 
 GEOS = ["us-east", "us-west", "eu-central", "ap-south"]
 TIERS = ["edge", "core", "mgmt"]
+# covers the synthetic host pool host0..host999 (fixtures._HOSTS_POOL)
+N_HOSTS = 1000
 
 
 def dim_facility(spark: SparkSession) -> DataFrame:
@@ -42,11 +44,11 @@ def dim_severity(spark: SparkSession) -> DataFrame:
         "severity int, severity_name string, severity_class string")
 
 
-def dim_host(spark: SparkSession, n_hosts: int = 1000) -> DataFrame:
+def dim_host(spark: SparkSession) -> DataFrame:
     """Deterministic host dim covering the synthetic host pool + fixture
     hostnames (unknown hosts keep null geo/tier through the left join)."""
     rows = [(f"host{i}", GEOS[i % len(GEOS)], TIERS[i % len(TIERS)])
-            for i in range(n_hosts)]
+            for i in range(N_HOSTS)]
     rows += [("mymachine", "us-east", "core"),
              ("localhost", "us-east", "edge"),
              ("mymachine.example.com", "eu-central", "core"),
@@ -55,13 +57,12 @@ def dim_host(spark: SparkSession, n_hosts: int = 1000) -> DataFrame:
                                        "tier string")
 
 
-def enrich(parsed: DataFrame, spark: SparkSession,
-           n_hosts: int = 1000) -> DataFrame:
+def enrich(parsed: DataFrame, spark: SparkSession) -> DataFrame:
     """Left broadcast joins — dims are KBs, so the fact side never shuffles
     and Catalyst plans BroadcastHashJoinExec for all three."""
     return (
         parsed
         .join(F.broadcast(dim_facility(spark)), "facility", "left")
         .join(F.broadcast(dim_severity(spark)), "severity", "left")
-        .join(F.broadcast(dim_host(spark, n_hosts)), "hostname", "left")
+        .join(F.broadcast(dim_host(spark)), "hostname", "left")
     )

@@ -1,16 +1,15 @@
 """Snapshot/manifest layer: Iceberg-style commit + resume over Parquet.
 
-The north rule targets Iceberg tables; no Iceberg jar is obtainable in this
-offline sandbox (SURVEY.md §7.5), so the pipeline writes through a thin
-catalog abstraction: when ``format='iceberg'`` is available on a real
-cluster the same code path uses it verbatim; here, snapshots are emulated
-as versioned manifest JSON documents committed by atomic rename.
+The north rule targets Iceberg tables; no Iceberg jar is obtainable
+offline (SURVEY.md §7.5), so the jobs read and write parquet and Iceberg
+snapshots are emulated as versioned manifest JSON documents committed by
+atomic rename.
 
 A snapshot records, per completed stage: row counts, parse metrics and
-per-partition lineage rows.  ``resume`` reads the last committed snapshot
-and skips completed stages; stage writes are idempotent (deterministic
-salting, overwrite mode), so a kill-and-rerun produces byte-identical
-output.
+per-partition lineage rows.  ``run_stages`` reads the last committed
+snapshot and skips completed stages; stage writes are idempotent
+(deterministic salting, overwrite mode), so a kill-and-rerun produces
+byte-identical output.
 """
 
 from __future__ import annotations
@@ -61,6 +60,36 @@ class Manifest:
 
     def is_done(self, stage: str) -> bool:
         return stage in self.load()["stages"]
+
+
+def run_stages(out_dir: str, stages, fail_after: str | None = None) -> dict:
+    """Run (or resume) the ordered ``(name, fn)`` stages of one job.
+
+    A stage already committed in ``out_dir``'s manifest is skipped and
+    listed in ``resumed_stages``; any other stage runs ``fn()`` and commits
+    the info dict it returns.  A stage that raises is not committed and no
+    later stage runs.  ``fail_after`` raises after the named stage commits
+    (the kill point of the resume tests).  Returns the committed stage
+    infos (``stages``), ``resumed_stages``, ``snapshot`` and ``wall_sec``."""
+    t0 = time.time()
+    manifest = Manifest(out_dir)
+    resumed = []
+    for name, fn in stages:
+        if manifest.is_done(name):
+            resumed.append(name)
+            continue
+        manifest.commit_stage(name, fn() or {})
+        if fail_after == name:
+            raise RuntimeError(f"injected failure after stage {name}")
+    state = manifest.load()
+    return {"stages": state["stages"], "resumed_stages": resumed,
+            "snapshot": state["snapshot_id"], "wall_sec": time.time() - t0}
+
+
+def committed_stages(out_dir: str) -> dict:
+    """Stage name -> committed info under ``out_dir`` (for a stage that
+    consumes an earlier stage's info, whether it ran now or was resumed)."""
+    return Manifest(out_dir).load()["stages"]
 
 
 def partition_lineage(df) -> list[dict]:

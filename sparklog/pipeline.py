@@ -13,6 +13,7 @@ Plan shape (everything except the one MapInArrow is JVM-side):
     aggregates/metrics re-read the written sinks (partial+final agg).
 
 Usage:  python -m sparklog.pipeline --gen-rows 100000 --out /tmp/slout
+        python -m sparklog.pipeline --job dedup --src SF_DIR --out /tmp/dd
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,16 +28,9 @@ from pyspark.sql import functions as F
 from .aggregate import hourly_counts, parse_metrics
 from .enrich import enrich
 from .grammar import ParseConfig
-from .lineage import Manifest, partition_lineage
+from .lineage import committed_stages, partition_lineage, run_stages
 from .route import audit_token_equality, with_route_columns, write_sinks
 from .udfs import MAP_IN_ARROW_SCHEMA, make_map_in_arrow_parser
-
-PARSED_COLS = [
-    "priority", "facility", "severity", "version", "ts",
-    "tz_offset_minutes", "ts_is_nil", "hostname", "tag", "content",
-    "app_name", "proc_id", "msg_id", "structured_data", "message",
-    "parse_error",
-]
 
 
 def parse_stage(src: DataFrame, cfg: ParseConfig | None = None) -> DataFrame:
@@ -58,87 +51,49 @@ def parse_stage(src: DataFrame, cfg: ParseConfig | None = None) -> DataFrame:
                .mapInArrow(fn, MAP_IN_ARROW_SCHEMA))
 
 
-def _read_source(spark: SparkSession, src_path: str,
-                 table_format: str = "parquet") -> DataFrame:
-    """Source reader through the catalog abstraction (SURVEY.md §7.5):
-    'iceberg' is used verbatim when the runtime jar is present (real
-    clusters); this offline sandbox falls back to parquet + the manifest
-    emulation in lineage.py."""
-    if table_format == "iceberg":
-        try:
-            return spark.read.format("iceberg").load(src_path)
-        except Exception:  # noqa: BLE001 — jar absent offline
-            pass
-    return spark.read.parquet(src_path)
-
-
 def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
                  cfg: ParseConfig | None = None, num_partitions: int = 32,
-                 salt_buckets: int = 16, fail_after: str | None = None,
-                 do_audit: bool = True,
-                 table_format: str = "parquet") -> dict:
+                 fail_after: str | None = None) -> dict:
     """Run (or resume) the full job.  ``fail_after`` kills the run after the
-    named stage commits — used by the resume test."""
-    manifest = Manifest(out_dir)
-    stats: dict = {"resumed_stages": []}
-    t0 = time.time()
-
-    src = _read_source(spark, src_path, table_format)
-    parsed = enrich(parse_stage(src, cfg), spark)
-    routed = with_route_columns(parsed)
-
-    def stage(name: str, fn):
-        if manifest.is_done(name):
-            stats["resumed_stages"].append(name)
-            return
-        info = fn() or {}
-        manifest.commit_stage(name, info)
-        if fail_after == name:
-            raise RuntimeError(f"injected failure after stage {name}")
+    named stage commits — used by the resume test.  ``rows`` and
+    ``n_failed`` are summed from the committed per-source parse metrics,
+    so no stage output is re-scanned after the last commit."""
+    src = spark.read.parquet(src_path)
+    routed = with_route_columns(enrich(parse_stage(src, cfg), spark))
+    sinks = os.path.join(out_dir, "sinks")
 
     def _sinks():
-        write_sinks(routed, os.path.join(out_dir, "sinks"),
-                    num_partitions, salt_buckets)
-        return {"lineage": partition_lineage(
-            spark.read.parquet(os.path.join(out_dir, "sinks")))}
+        write_sinks(routed, sinks, num_partitions)
+        return {"lineage": partition_lineage(spark.read.parquet(sinks))}
 
     def _aggregates():
-        routed_back = spark.read.parquet(os.path.join(out_dir, "sinks"))
-        (hourly_counts(routed_back)
+        (hourly_counts(spark.read.parquet(sinks))
          .repartition(1)
          .write.mode("overwrite")
          .parquet(os.path.join(out_dir, "aggregates")))
-        return {}
 
     def _metrics():
-        routed_back = spark.read.parquet(os.path.join(out_dir, "sinks"))
-        pm = parse_metrics(routed_back)
+        pm = parse_metrics(spark.read.parquet(sinks))
         pm.repartition(1).write.mode("overwrite").parquet(
             os.path.join(out_dir, "metrics"))
-        rows = {f"{r['source']}/{r['rfc']}": (r["n_ok"], r["n_failed"])
-                for r in pm.collect()}
-        return {"per_source": {k: list(v) for k, v in rows.items()}}
+        return {"per_source": {f"{r['source']}/{r['rfc']}":
+                               [r["n_ok"], r["n_failed"]]
+                               for r in pm.collect()}}
 
     def _audit():
-        routed_back = spark.read.parquet(os.path.join(out_dir, "sinks"))
-        violations = audit_token_equality(routed_back, src)
+        violations = audit_token_equality(spark.read.parquet(sinks), src)
         if violations:
             raise AssertionError(
                 f"token-array equality audit failed: {violations} rows")
         return {"violations": 0}
 
-    stage("sinks", _sinks)
-    stage("aggregates", _aggregates)
-    stage("metrics", _metrics)
-    if do_audit:
-        stage("audit", _audit)
-
-    routed_back = spark.read.parquet(os.path.join(out_dir, "sinks"))
-    stats["rows"] = routed_back.count()
-    stats["n_failed"] = routed_back.where(
-        F.col("parse_error").isNotNull()).count()
-    stats["wall_sec"] = time.time() - t0
-    stats["snapshot"] = manifest.load()["snapshot_id"]
+    stats = run_stages(out_dir, [("sinks", _sinks),
+                                 ("aggregates", _aggregates),
+                                 ("metrics", _metrics),
+                                 ("audit", _audit)], fail_after)
+    counts = stats.pop("stages")["metrics"]["per_source"].values()
+    stats["rows"] = sum(n_ok + n_failed for n_ok, n_failed in counts)
+    stats["n_failed"] = sum(n_failed for _, n_failed in counts)
     return stats
 
 
@@ -147,9 +102,8 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     component partition (what downstream keep-one-per-component actually
     consumes), the maximal cross-doc substring runs (round 7 — what an
     excision pass consumes), and the per-path cap-cascade observability
-    table — written with the same manifest/stage pattern as
-    run_pipeline, metrics beside outputs the way parse_metrics sits
-    beside the sinks."""
+    table — staged through ``run_stages`` like run_pipeline, metrics
+    beside outputs the way parse_metrics sits beside the sinks."""
     from .queries import (
         dedup_components_with_stats,
         dedup_minhash_lsh,
@@ -158,23 +112,11 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         release_caches,
     )
 
-    manifest = Manifest(out_dir)
-    stats: dict = {"resumed_stages": []}
-    t0 = time.time()
-
-    def stage(name: str, fn):
-        if manifest.is_done(name):
-            stats["resumed_stages"].append(name)
-            return
-        info = fn() or {}
-        manifest.commit_stage(name, info)
-
     def _pairs():
         (dedup_minhash_lsh(spark, sf_dir)
          .write.mode("overwrite")
          .parquet(os.path.join(out_dir, "near_dup_pairs")))
         release_caches()
-        return {}
 
     def _components():
         df, cc = dedup_components_with_stats(spark, sf_dir)
@@ -192,13 +134,11 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
          .write.mode("overwrite")
          .parquet(os.path.join(out_dir, "substring_runs")))
         release_caches()
-        return {}
 
     def _metrics():
         # reuse the components stage's propagation stats (committed in
         # its manifest info) instead of running the CC loop a second time
-        cc = (manifest.load()["stages"].get("components", {})
-              .get("cc"))
+        cc = committed_stages(out_dir)["components"]["cc"]
         dm = dedup_path_metrics(spark, sf_dir, cc_stats=cc)
         dm.repartition(1).write.mode("overwrite").parquet(
             os.path.join(out_dir, "dedup_metrics"))
@@ -212,22 +152,17 @@ def run_dedup(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
                     os.path.join(out_dir, "dedup_metrics")).collect()}
         return {"bucket_metrics": rows}
 
-    stage("near_dup_pairs", _pairs)
-    stage("components", _components)
-    stage("substring_runs", _substring)
-    stage("dedup_metrics", _metrics)
-
+    stats = run_stages(out_dir, [("near_dup_pairs", _pairs),
+                                 ("components", _components),
+                                 ("substring_runs", _substring),
+                                 ("dedup_metrics", _metrics)])
+    done = stats.pop("stages")
+    stats["n_components"] = done["components"]["cc"]["n_components"]
+    stats["bucket_metrics"] = done["dedup_metrics"]["bucket_metrics"]
     stats["n_pairs"] = spark.read.parquet(
         os.path.join(out_dir, "near_dup_pairs")).count()
     stats["n_substring_runs"] = spark.read.parquet(
         os.path.join(out_dir, "substring_runs")).count()
-    stats["n_components"] = spark.read.parquet(
-        os.path.join(out_dir, "components")) \
-        .select("component_rep").distinct().count()
-    stats["bucket_metrics"] = (manifest.load()["stages"]
-                               .get("dedup_metrics", {})
-                               .get("bucket_metrics", {}))
-    stats["wall_sec"] = time.time() - t0
     return stats
 
 
@@ -242,53 +177,35 @@ def run_curate(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
       corpus/   — kept docs only, scrubbed text as the new ``text``
                   column + ``source`` metadata: the next training corpus
 
-    plus per-reason counts in the manifest.  Same manifest/stage pattern
-    as run_pipeline: the single expensive scan materializes once into
+    plus per-reason counts in the manifest.  Staged through ``run_stages``
+    like run_pipeline: the single expensive scan materializes once into
     ``curated`` and both the corpus write and the metrics are cheap
     re-reads of that parquet — re-running the curate plan per stage would
     double the corpus-sized work."""
     from .queries import curate_corpus
 
-    manifest = Manifest(out_dir)
-    stats: dict = {"resumed_stages": []}
-    t0 = time.time()
-
-    def stage(name: str, fn):
-        if manifest.is_done(name):
-            stats["resumed_stages"].append(name)
-            return
-        info = fn() or {}
-        manifest.commit_stage(name, info)
+    curated = os.path.join(out_dir, "curated")
 
     def _curated():
-        (curate_corpus(spark, sf_dir)
-         .write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "curated")))
-        return {}
+        curate_corpus(spark, sf_dir).write.mode("overwrite").parquet(curated)
 
     def _corpus():
-        cur = spark.read.parquet(os.path.join(out_dir, "curated"))
-        (cur.where("keep")
+        (spark.read.parquet(curated).where("keep")
             .select("doc_id", "source",
                     F.col("scrubbed_text").alias("text"))
             .write.mode("overwrite")
             .parquet(os.path.join(out_dir, "corpus")))
-        return {}
 
     def _metrics():
-        cur = spark.read.parquet(os.path.join(out_dir, "curated"))
-        rows = cur.groupBy("reason").count().collect()
+        rows = spark.read.parquet(curated).groupBy("reason").count().collect()
         return {"reasons": {r["reason"]: r["count"] for r in rows}}
 
-    stage("curated", _curated)
-    stage("corpus", _corpus)
-    stage("curate_metrics", _metrics)
-
-    stats["reasons"] = (manifest.load()["stages"]
-                        .get("curate_metrics", {}).get("reasons", {}))
+    stats = run_stages(out_dir, [("curated", _curated),
+                                 ("corpus", _corpus),
+                                 ("curate_metrics", _metrics)])
+    stats["reasons"] = stats.pop("stages")["curate_metrics"]["reasons"]
     stats["n_docs"] = sum(stats["reasons"].values())
     stats["n_kept"] = stats["reasons"].get("kept", 0)
-    stats["wall_sec"] = time.time() - t0
     return stats
 
 
@@ -302,59 +219,40 @@ def run_incremental(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
       additions/  — the kept batch docs with their text: what actually
                     gets appended to the corpus
 
-    plus flag counts in the manifest.  Same manifest/stage pattern as
+    plus flag counts in the manifest.  Staged through ``run_stages`` like
     run_dedup/run_curate: the probe materializes once into ``flags`` and
     the additions join is batch-sized."""
     from .queries import _t, dedup_incremental
 
-    manifest = Manifest(out_dir)
-    stats: dict = {"resumed_stages": []}
-    t0 = time.time()
-
-    def stage(name: str, fn):
-        if manifest.is_done(name):
-            stats["resumed_stages"].append(name)
-            return
-        info = fn() or {}
-        manifest.commit_stage(name, info)
+    flags = os.path.join(out_dir, "flags")
+    flag_cols = ("exact_dup_corpus", "near_dup_corpus", "dup_in_batch",
+                 "keep")
 
     def _flags():
-        (dedup_incremental(spark, sf_dir)
-         .write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "flags")))
-        return {}
+        dedup_incremental(spark, sf_dir).write.mode("overwrite").parquet(
+            flags)
 
     def _additions():
-        kept = (spark.read.parquet(os.path.join(out_dir, "flags"))
-                .where("keep").select("doc_id"))
+        kept = spark.read.parquet(flags).where("keep").select("doc_id")
         docs = _t(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("long").alias("doc_id"), "text", "source")
         (docs.join(F.broadcast(kept), "doc_id")
              .write.mode("overwrite")
              .parquet(os.path.join(out_dir, "additions")))
-        return {}
 
     def _metrics():
-        fl = spark.read.parquet(os.path.join(out_dir, "flags"))
-        rows = (fl.groupBy("exact_dup_corpus", "near_dup_corpus",
-                           "dup_in_batch", "keep").count().collect())
-        combos = {"|".join(str(r[c]) for c in
-                           ("exact_dup_corpus", "near_dup_corpus",
-                            "dup_in_batch", "keep")): r["count"]
-                  for r in rows}
-        return {"flag_combos": combos}
+        rows = spark.read.parquet(flags).groupBy(*flag_cols).count().collect()
+        return {"flag_combos": {"|".join(str(r[c]) for c in flag_cols):
+                                r["count"] for r in rows}}
 
-    stage("flags", _flags)
-    stage("additions", _additions)
-    stage("incremental_metrics", _metrics)
-
-    stats["flag_combos"] = (manifest.load()["stages"]
-                            .get("incremental_metrics", {})
-                            .get("flag_combos", {}))
+    stats = run_stages(out_dir, [("flags", _flags),
+                                 ("additions", _additions),
+                                 ("incremental_metrics", _metrics)])
+    stats["flag_combos"] = stats.pop("stages")["incremental_metrics"][
+        "flag_combos"]
     stats["n_batch"] = sum(stats["flag_combos"].values())
     stats["n_added"] = spark.read.parquet(
         os.path.join(out_dir, "additions")).count()
-    stats["wall_sec"] = time.time() - t0
     return stats
 
 
@@ -367,46 +265,39 @@ def run_tokenize(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     artifact via their ``merges=`` parameter, which is what a production
     pipeline does: one learning pass per corpus snapshot, every
     downstream job injects the artifact (the blocklist-injection
-    pattern).  Manifest-staged and resume-idempotent like the sibling
-    jobs."""
+    pattern).  Staged through ``run_stages`` and resume-idempotent like
+    the sibling jobs."""
     from .bpe import save_merges
     from .queries import _bpe_merges
-
-    manifest = Manifest(out_dir)
-    stats: dict = {"resumed_stages": []}
-    t0 = time.time()
-
-    def stage(name: str, fn):
-        if manifest.is_done(name):
-            stats["resumed_stages"].append(name)
-            return
-        info = fn() or {}
-        manifest.commit_stage(name, info)
 
     def _merges():
         merges = _bpe_merges(spark, sf_dir)
         save_merges(spark, merges, os.path.join(out_dir, "merges"))
         return {"n_merges": len(merges)}
 
-    stage("merges", _merges)
-    stats["n_merges"] = (manifest.load()["stages"]
-                         .get("merges", {}).get("n_merges"))
-    stats["wall_sec"] = time.time() - t0
+    stats = run_stages(out_dir, [("merges", _merges)])
+    stats["n_merges"] = stats.pop("stages")["merges"]["n_merges"]
     return stats
+
+
+JOBS = {"dedup": run_dedup, "curate": run_curate,
+        "incremental": run_incremental, "tokenize": run_tokenize}
 
 
 def main(argv=None):
     ap = argparse.ArgumentParser()
-    ap.add_argument("--src", default=None, help="tokens parquet path")
+    ap.add_argument("--job", default="pipeline", choices=["pipeline", *JOBS])
+    ap.add_argument("--src", default=None,
+                    help="input: the tokens parquet table for the pipeline "
+                         "job, the sf dir of parquet tables for the others")
     ap.add_argument("--out", default="/tmp/sparklog_out")
     ap.add_argument("--gen-rows", type=int, default=0,
-                    help="generate a synthetic tokens table of N rows")
+                    help="pipeline job: generate a synthetic tokens table "
+                         "of N rows as the input")
     ap.add_argument("--master", default=None)
     ap.add_argument("--partitions", type=int, default=32)
     ap.add_argument("--fresh", action="store_true",
                     help="ignore existing manifest (full rerun)")
-    ap.add_argument("--format", default="parquet",
-                    choices=["parquet", "iceberg"])
     # With* injection hooks of the reference, as job-level config
     # (rfc3164/rfc3164.go:58-86)
     ap.add_argument("--default-year", type=int, default=2025)
@@ -417,65 +308,34 @@ def main(argv=None):
     ap.add_argument("--ts-format", default=None,
                     help="custom strptime timestamp layout")
     ap.add_argument("--ts-format-len", type=int, default=None)
-    ap.add_argument("--dedup-sf", default=None,
-                    help="run the dedup job (near-dup pairs + components "
-                         "+ bucket metrics) over this sf dir instead of "
-                         "the parse pipeline")
-    ap.add_argument("--curate-sf", default=None,
-                    help="run the curation job (verdict ledger + scrubbed "
-                         "kept corpus + reason counts) over this sf dir "
-                         "instead of the parse pipeline")
-    ap.add_argument("--incremental-sf", default=None,
-                    help="run the incremental-dedup job (batch-vs-corpus "
-                         "flags + kept additions + flag counts) over this "
-                         "sf dir instead of the parse pipeline")
-    ap.add_argument("--tokenize-sf", default=None,
-                    help="learn + persist the BPE tokenizer artifact "
-                         "(merges/ parquet) over this sf dir instead of "
-                         "the parse pipeline")
     args = ap.parse_args(argv)
-
-    cfg = ParseConfig(
-        priority=args.inject_priority, hostname=args.inject_hostname,
-        tag=args.inject_tag, location=args.location,
-        ts_format=args.ts_format, ts_format_len=args.ts_format_len,
-        default_year=args.default_year)
+    if args.src is None and not (args.job == "pipeline" and args.gen_rows):
+        ap.error("--src is required (or --gen-rows for the pipeline job)")
 
     from .session import get_spark
     spark = get_spark(args.master)
     spark.sparkContext.setLogLevel("WARN")
-
-    if args.dedup_sf:
-        print(json.dumps(run_dedup(spark, args.dedup_sf, args.out),
-                         default=str))
-        return
-    if args.curate_sf:
-        print(json.dumps(run_curate(spark, args.curate_sf, args.out),
-                         default=str))
-        return
-    if args.incremental_sf:
-        print(json.dumps(run_incremental(spark, args.incremental_sf,
-                                         args.out), default=str))
-        return
-    if args.tokenize_sf:
-        print(json.dumps(run_tokenize(spark, args.tokenize_sf, args.out),
-                         default=str))
-        return
-
-    src = args.src
-    if args.gen_rows:
-        from .fixtures import synth_lines, write_tokens_table
-        src = os.path.join(args.out, "src_tokens")
-        write_tokens_table(spark, synth_lines(args.gen_rows), src,
-                           n_partitions=max(args.partitions, 8))
     if args.fresh:
         import shutil
         shutil.rmtree(os.path.join(args.out, "_manifests"),
                       ignore_errors=True)
 
-    stats = run_pipeline(spark, src, args.out, cfg=cfg,
-                         num_partitions=args.partitions,
-                         table_format=args.format)
+    if args.job in JOBS:
+        stats = JOBS[args.job](spark, args.src, args.out)
+    else:
+        src = args.src
+        if args.gen_rows:
+            from .fixtures import synth_lines, write_tokens_table
+            src = os.path.join(args.out, "src_tokens")
+            write_tokens_table(spark, synth_lines(args.gen_rows), src,
+                               n_partitions=max(args.partitions, 8))
+        cfg = ParseConfig(
+            priority=args.inject_priority, hostname=args.inject_hostname,
+            tag=args.inject_tag, location=args.location,
+            ts_format=args.ts_format, ts_format_len=args.ts_format_len,
+            default_year=args.default_year)
+        stats = run_pipeline(spark, src, args.out, cfg=cfg,
+                             num_partitions=args.partitions)
     print(json.dumps(stats, default=str))
 
 

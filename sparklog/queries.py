@@ -457,14 +457,15 @@ def streaming_user_state(spark, sf):
     final emission exact regardless of epoch split."""
     import os
 
-    from .streaming import run_user_state_batch
+    from .streaming import run_user_state_job
 
     tag = _source_fingerprint(os.path.join(sf, "events.parquet"))
     ev_dir = f"/tmp/sparklog_stream_events_{tag}"
     if not os.path.exists(os.path.join(ev_dir, "_SUCCESS")):
         _publish_cached(_t(spark, sf, "events"), ev_dir)
-    out = run_user_state_batch(spark, ev_dir,
-                               _scratch_dir("slst", tag))
+    scratch = _scratch_dir("slst", tag)
+    out = run_user_state_job(spark, ev_dir, scratch,
+                             os.path.join(scratch, "checkpoint"))
     return out.select(
         "user_id", "n_events", "n_types",
         F.date_format("min_ts", "yyyy-MM-dd HH:mm:ss").alias("min_ts"),
@@ -1047,8 +1048,8 @@ def _keyed_with_splits(keyed: DataFrame, key: str, id_col: str, cap: int,
 def bucket_split_stats(keyed: DataFrame, key: str, id_col: str, cap: int,
                        refine=None, approx_rows=None) -> DataFrame:
     """One-row observability aggregate for the cap/refine/salt cascade —
-    the dedup jobs' companion metric (exported via sparklog.aggregate next
-    to parse_metrics).  n_dropped_rows > 0 means the hard guard fired;
+    the dedup jobs' companion metric, written by run_dedup's
+    dedup_metrics stage.  n_dropped_rows > 0 means the hard guard fired;
     n_salted_rows counts rows whose pairs are split-local (bounded recall
     loss), n_refined_rows counts rows that needed extra signature bits."""
     df = _keyed_with_splits(keyed, key, id_col, cap, refine,

@@ -35,15 +35,14 @@ def salted_repartition(df: DataFrame, num_partitions: int,
     )
 
 
-def write_sinks(df: DataFrame, out_dir: str, num_partitions: int = 32,
-                salt_buckets: int = 16) -> None:
+def write_sinks(df: DataFrame, out_dir: str, num_partitions: int = 32) -> None:
     """Single-pass fan-out: one write partitioned by sink key.
 
     At cluster scale this is one shuffle (the salted repartition) followed
     by a dynamic-partition write; no N-pass filtered rewrites of the fact
     table.
     """
-    (salted_repartition(df, num_partitions, salt_buckets)
+    (salted_repartition(df, num_partitions)
      .write.mode("overwrite")
      .partitionBy("rfc", "sink_class")
      .parquet(out_dir))

@@ -1,4 +1,7 @@
-"""SparkSession factory with the pipeline's standard config."""
+"""SparkSession factory with the pipeline's standard config.
+
+Cores and driver heap default to what this host has; ``SPARK_GRAFT_CPUS``
+and ``SPARKLOG_DRIVER_MEM`` override them for a deployment."""
 
 from __future__ import annotations
 
@@ -7,9 +10,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the physical RAM, capped at 48g: the driver JVM shares the host
+    with its Python workers and the tmpfs shuffle dir."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(ram_mb // 2, 48 << 10)}m"
+
+
 def get_spark(master: str | None = None, app: str = "sparklog",
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = (os.environ.get("SPARK_GRAFT_CPUS")
+            or str(len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     n_threads = master.split("[")[-1].rstrip("]")
     shuffle = shuffle_partitions or (
@@ -32,7 +43,8 @@ def get_spark(master: str | None = None, app: str = "sparklog",
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory",
-                os.environ.get("SPARKLOG_DRIVER_MEM", "48g"))
+                os.environ.get("SPARKLOG_DRIVER_MEM")
+                or _default_driver_memory())
         # local-mode shuffle through one shared disk caps multi-core
         # scaling; tmpfs restores the per-node shuffle locality a real
         # cluster has (each executor spills to its own local disks)

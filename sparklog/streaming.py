@@ -51,29 +51,34 @@ def streaming_hourly_counts(stream: DataFrame,
                     "n_events"))
 
 
+def epoch_writer(path: str, *partition_cols: str):
+    """foreachBatch sink: each epoch's rows land under their own
+    epoch=<id> partition (then ``partition_cols``) with dynamic-partition
+    OVERWRITE, so a failure between a partial write and the checkpoint
+    commit is repaired by the replay overwriting exactly that epoch's
+    partitions (a blind append would duplicate rows)."""
+    def write(df: DataFrame, epoch_id: int) -> None:
+        (df.withColumn("epoch", F.lit(epoch_id))
+           .write.mode("overwrite")
+           .option("partitionOverwriteMode", "dynamic")
+           .partitionBy("epoch", *partition_cols)
+           .parquet(path))
+    return write
+
+
 def start_streaming_job(spark: SparkSession, src_dir: str, out_dir: str,
                         checkpoint: str, cfg: ParseConfig | None = None):
     """Fan-out sink writer via foreachBatch: exactly-once-per-epoch writes
-    partitioned by (epoch, rfc, sink_class), checkpointed for resume.
-
-    Idempotence: each epoch writes under its own epoch=<id> partition with
-    dynamic-partition OVERWRITE, so a failure between a partial write and
-    the checkpoint commit is repaired by the replay overwriting exactly
-    that epoch's partitions (a blind append would duplicate rows)."""
+    partitioned by (epoch, rfc, sink_class) through ``epoch_writer``,
+    checkpointed for resume."""
     from .enrich import enrich
 
     parsed = with_route_columns(
         enrich(parse_stage(read_token_stream(spark, src_dir), cfg), spark))
 
-    def write_epoch(df: DataFrame, epoch_id: int) -> None:
-        (df.withColumn("epoch", F.lit(epoch_id))
-           .write.mode("overwrite")
-           .option("partitionOverwriteMode", "dynamic")
-           .partitionBy("epoch", "rfc", "sink_class")
-           .parquet(f"{out_dir}/sinks"))
-
     return (parsed.writeStream
-            .foreachBatch(write_epoch)
+            .foreachBatch(epoch_writer(f"{out_dir}/sinks", "rfc",
+                                       "sink_class"))
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start())
@@ -132,28 +137,19 @@ def user_state_stream(stream: DataFrame) -> DataFrame:
 
 def run_user_state_job(spark: SparkSession, events_dir: str, out_dir: str,
                        checkpoint: str) -> DataFrame:
-    """PRODUCTION-shape run of the stateful per-user aggregate: the
-    update-mode emissions land in an epoch-partitioned parquet sink via
-    foreachBatch (exactly-once per epoch: dynamic-partition overwrite
-    under epoch=<id>, the same idempotent-replay recipe as
-    start_streaming_job), and the final per-user row is reduced from the
-    sink DISTRIBUTEDLY.  Nothing accumulates on the driver at any corpus
-    size — use this, not run_user_state_batch, on a cluster."""
+    """Run the stateful per-user aggregate to completion: the update-mode
+    emissions land in an epoch-partitioned parquet sink via
+    ``epoch_writer`` (exactly-once per epoch), and the final per-user row
+    is reduced from the sink DISTRIBUTEDLY.  Nothing accumulates on the
+    driver at any corpus size."""
     schema = spark.read.parquet(events_dir).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1)
               .parquet(events_dir))
 
-    def write_epoch(df: DataFrame, epoch_id: int) -> None:
-        (df.withColumn("epoch", F.lit(epoch_id))
-           .write.mode("overwrite")
-           .option("partitionOverwriteMode", "dynamic")
-           .partitionBy("epoch")
-           .parquet(f"{out_dir}/user_state"))
-
     q = (user_state_stream(stream)
          .writeStream
-         .foreachBatch(write_epoch)
+         .foreachBatch(epoch_writer(f"{out_dir}/user_state"))
          .outputMode("update")
          .option("checkpointLocation", checkpoint)
          .trigger(availableNow=True)
@@ -163,9 +159,11 @@ def run_user_state_job(spark: SparkSession, events_dir: str, out_dir: str,
 
 
 def read_user_state_result(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Final per-user aggregate from the epoch-partitioned sink: n_events
-    is monotone across epochs, so the max-n_events row per user is the
-    complete state (a window over the sink — distributed, no collect)."""
+    """Final per-user aggregate from the epoch-partitioned sink: a user is
+    emitted only in epochs that bring it new rows, so its n_events is
+    strictly monotone across its emissions and the max-n_events row is
+    unique and the complete state (a window over the sink — distributed,
+    no collect)."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc(),
@@ -174,38 +172,6 @@ def read_user_state_result(spark: SparkSession, out_dir: str) -> DataFrame:
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn", "epoch"))
-
-
-def run_user_state_batch(spark: SparkSession, events_dir: str,
-                         checkpoint: str,
-                         name: str = "user_state_sink") -> DataFrame:
-    """ORACLE-HARNESS-ONLY variant: the update-mode MEMORY sink
-    accumulates one row per (user, epoch-with-changes) on the DRIVER, and
-    the final (max n_events) row per user is the complete aggregate.
-    Driver-bound by construction — convenient for the DuckDB parity gate,
-    wrong for a cluster; the production path is run_user_state_job's
-    foreachBatch parquet sink."""
-    from pyspark.sql.window import Window
-
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    schema = spark.read.parquet(events_dir).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(events_dir))
-    q = (user_state_stream(stream)
-         .writeStream.format("memory").queryName(name)
-         .outputMode("update")
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (spark.table(name)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn"))
 
 
 def run_streaming_hourly_batch(spark: SparkSession, tokens_dir: str,
@@ -242,8 +208,8 @@ def run_incremental_dedup_stream(spark: SparkSession, batch_dir: str,
     """Continuous-ingestion dedup: a file-source stream of new documents
     probes the STATIC corpus's key/band tables per epoch (stream-static
     via foreachBatch, so each epoch runs the exact batch probe operator
-    — queries._probe_corpus_flags), writing per-epoch flag rows with the
-    same epoch-partition overwrite idempotence as start_streaming_job.
+    — queries._probe_corpus_flags), writing per-epoch flag rows through
+    ``epoch_writer``.
 
     The corpus tables are prepared ONCE, deduplicated to unique keys,
     and persisted — they are the artifacts a nightly run_dedup
@@ -264,20 +230,18 @@ def run_incremental_dedup_stream(spark: SparkSession, batch_dir: str,
         cdocs.groupBy(_gk().alias("gk"))
              .agg(F.min("text").alias("text"))).persist()
 
-    def write_epoch(df: DataFrame, epoch_id: int) -> None:
+    write = epoch_writer(out_dir)
+
+    def probe_epoch(df: DataFrame, epoch_id: int) -> None:
         _, _, probe = _probe_corpus_flags(df, c_gks, c_bands, F.broadcast)
-        (probe.select("doc_id", "exact_dup_corpus", "near_dup_corpus")
-              .withColumn("epoch", F.lit(epoch_id))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("epoch")
-              .parquet(out_dir))
+        write(probe.select("doc_id", "exact_dup_corpus", "near_dup_corpus"),
+              epoch_id)
 
     try:
         q = (spark.readStream.schema(DOCS_STREAM_SCHEMA)
              .option("maxFilesPerTrigger", max_files)
              .parquet(batch_dir)
-             .writeStream.foreachBatch(write_epoch)
+             .writeStream.foreachBatch(probe_epoch)
              .option("checkpointLocation", checkpoint)
              .trigger(availableNow=True)
              .start())

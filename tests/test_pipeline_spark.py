@@ -116,6 +116,12 @@ def test_full_pipeline_and_audit(spark, tmp_path):
     stats = run_pipeline(spark, src_path, out_dir, num_partitions=4)
     assert stats["rows"] == 2000
     assert stats["n_failed"] > 0          # dead-letter path exercised
+    # the stats come from committed stage counts: check them against a
+    # direct count of what the sinks stage wrote
+    sinks = spark.read.parquet(os.path.join(out_dir, "sinks"))
+    assert stats["rows"] == sinks.count()
+    assert stats["n_failed"] == sinks.where(
+        F.col("parse_error").isNotNull()).count()
     # audit stage committed with zero violations
     import json
     with open(os.path.join(out_dir, "_manifests", "CURRENT")) as f:
@@ -193,6 +199,9 @@ def test_run_dedup_writes_outputs_and_bucket_metrics(spark, tmp_path):
     stats = run_dedup(spark, "/root/testdata/sf0.001", out)
     assert stats["n_pairs"] >= 0 and stats["n_components"] > 0
     assert stats["n_substring_runs"] >= 0
+    assert stats["n_components"] == spark.read.parquet(
+        os.path.join(out, "components")) \
+        .select("component_rep").distinct().count()
     assert os.path.exists(os.path.join(out, "substring_runs"))
     # one metrics row per dedup path, all cascade counters present
     m = stats["bucket_metrics"]
@@ -308,3 +317,21 @@ def test_run_tokenize_artifact_roundtrips_and_injects(spark, tmp_path):
     again = run_tokenize(spark, sf, out)
     assert again["resumed_stages"] == ["merges"]
     assert again["n_merges"] == stats["n_merges"]
+
+
+def test_cli_job_tokenize_writes_merges(spark, tmp_path, capsys):
+    """``--job`` picks the job and ``--src`` is its input (here an sf
+    dir): the CLI runs the tokenizer job and prints its stats."""
+    import json
+
+    from sparklog.pipeline import main
+
+    out = str(tmp_path / "cli_out")
+    try:
+        main(["--job", "tokenize", "--src", "/root/testdata/sf0.001",
+              "--out", out])
+    finally:
+        spark.sparkContext.setLogLevel("ERROR")
+    assert os.path.exists(os.path.join(out, "merges"))
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats["n_merges"] > 0 and stats["resumed_stages"] == []
