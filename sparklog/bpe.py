@@ -219,9 +219,14 @@ def save_merges(spark, merges, path: str) -> None:
     tokenizer ONCE (pipeline.run_tokenize) and every token-keyed job
     loads this table instead of re-scanning the corpus — the same
     inject-the-artifact pattern as the curation blocklist."""
-    spark.createDataFrame(
-        [(i + 1, a, b) for i, (a, b) in enumerate(merges)],
-        "mi int, a string, b string").coalesce(1) \
+    import pyarrow as pa
+
+    # typed Arrow, not a Python list: the write scans a JVM-side
+    # LocalTableScan instead of running a Python task
+    table = pa.table({"mi": pa.array(range(1, len(merges) + 1), pa.int32()),
+                      "a": pa.array([a for a, _ in merges], pa.string()),
+                      "b": pa.array([b for _, b in merges], pa.string())})
+    spark.createDataFrame(table).coalesce(1) \
         .write.mode("overwrite").parquet(path)
 
 

@@ -2,11 +2,15 @@
 
 The reference has no joins; enrichment is the pipeline layer the north rule
 adds: facility/severity name maps and a hostname geo/tier dim, all tiny →
-broadcast hash joins (no shuffle of the fact side).
+broadcast hash joins (no shuffle of the fact side).  The dims are built
+from typed Arrow tables, so each broadcast build side is a JVM-side
+``LocalTableScan`` and the parse MapInArrow stays the job's only Python
+work.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,17 +35,29 @@ TIERS = ["edge", "core", "mgmt"]
 N_HOSTS = 1000
 
 
-def dim_facility(spark: SparkSession) -> DataFrame:
+def _dim(spark: SparkSession, rows: list, schema: pa.Schema) -> DataFrame:
+    """A constant table from typed Arrow columns: Spark plans it as a
+    JVM-side ``LocalTableScan``.  Built from a Python list it would be a
+    ``Scan ExistingRDD`` that runs Python tasks each time it is scanned,
+    every broadcast build included.  Keys are int32 like the parsed
+    ``facility``/``severity`` columns, so no cast lands on the fact side."""
     return spark.createDataFrame(
-        [(i, n) for i, n in enumerate(FACILITY_NAMES)],
-        "facility int, facility_name string")
+        pa.table(dict(zip(schema.names, zip(*rows))), schema=schema))
+
+
+def dim_facility(spark: SparkSession) -> DataFrame:
+    return _dim(spark, list(enumerate(FACILITY_NAMES)),
+                pa.schema([("facility", pa.int32()),
+                           ("facility_name", pa.string())]))
 
 
 def dim_severity(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(i, n, c) for i, (n, c)
-         in enumerate(zip(SEVERITY_NAMES, SEVERITY_CLASS))],
-        "severity int, severity_name string, severity_class string")
+    return _dim(spark,
+                [(i, n, c) for i, (n, c)
+                 in enumerate(zip(SEVERITY_NAMES, SEVERITY_CLASS))],
+                pa.schema([("severity", pa.int32()),
+                           ("severity_name", pa.string()),
+                           ("severity_class", pa.string())]))
 
 
 def dim_host(spark: SparkSession) -> DataFrame:
@@ -53,13 +69,15 @@ def dim_host(spark: SparkSession) -> DataFrame:
              ("localhost", "us-east", "edge"),
              ("mymachine.example.com", "eu-central", "core"),
              ("192.0.2.1", "ap-south", "edge")]
-    return spark.createDataFrame(rows, "hostname string, geo string, "
-                                       "tier string")
+    return _dim(spark, rows, pa.schema([("hostname", pa.string()),
+                                        ("geo", pa.string()),
+                                        ("tier", pa.string())]))
 
 
 def enrich(parsed: DataFrame, spark: SparkSession) -> DataFrame:
     """Left broadcast joins — dims are KBs, so the fact side never shuffles
-    and Catalyst plans BroadcastHashJoinExec for all three."""
+    and Catalyst plans BroadcastHashJoinExec for all three, each over a
+    LocalTableScan build side."""
     return (
         parsed
         .join(F.broadcast(dim_facility(spark)), "facility", "left")

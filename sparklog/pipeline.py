@@ -7,8 +7,8 @@ Plan shape (everything except the one MapInArrow is JVM-side):
     Scan parquet (pruned: doc_id, tokens, source)
       → MapInArrow: decode + detect + parse, one Python pass per batch
                                                           [no shuffle]
-      → 3× BroadcastHashJoin (dims)                       [no shuffle]
-      → salted repartition on sink key                    [the ONE shuffle]
+      → 3× BroadcastHashJoin over LocalTableScan dims     [no shuffle]
+      → salted repartition on sink key, AQE-sized width   [the ONE shuffle]
       → dynamic-partition parquet write per sink
     aggregates/metrics re-read the written sinks (partial+final agg).
 
@@ -52,7 +52,7 @@ def parse_stage(src: DataFrame, cfg: ParseConfig | None = None) -> DataFrame:
 
 
 def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
-                 cfg: ParseConfig | None = None, num_partitions: int = 32,
+                 cfg: ParseConfig | None = None,
                  fail_after: str | None = None) -> dict:
     """Run (or resume) the full job.  ``fail_after`` kills the run after the
     named stage commits — used by the resume test.  ``rows`` and
@@ -63,7 +63,7 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
     sinks = os.path.join(out_dir, "sinks")
 
     def _sinks():
-        write_sinks(routed, sinks, num_partitions)
+        write_sinks(routed, sinks)
         return {"lineage": partition_lineage(spark.read.parquet(sinks))}
 
     def _aggregates():
@@ -73,12 +73,17 @@ def run_pipeline(spark: SparkSession, src_path: str, out_dir: str,
          .parquet(os.path.join(out_dir, "aggregates")))
 
     def _metrics():
-        pm = parse_metrics(spark.read.parquet(sinks))
-        pm.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "metrics"))
+        metrics = os.path.join(out_dir, "metrics")
+        (parse_metrics(spark.read.parquet(sinks))
+         .repartition(1)
+         .write.mode("overwrite")
+         .parquet(metrics))
+        # collect the one-file table just written, not a second
+        # parse_metrics pass over the sinks
         return {"per_source": {f"{r['source']}/{r['rfc']}":
                                [r["n_ok"], r["n_failed"]]
-                               for r in pm.collect()}}
+                               for r in spark.read.parquet(metrics)
+                               .collect()}}
 
     def _audit():
         violations = audit_token_equality(spark.read.parquet(sinks), src)
@@ -295,7 +300,10 @@ def main(argv=None):
                     help="pipeline job: generate a synthetic tokens table "
                          "of N rows as the input")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--partitions", type=int, default=32)
+    ap.add_argument("--partitions", type=int, default=32,
+                    help="with --gen-rows: files of the generated tokens "
+                         "table (at least 8); the routing shuffle width is "
+                         "sized by AQE")
     ap.add_argument("--fresh", action="store_true",
                     help="ignore existing manifest (full rerun)")
     # With* injection hooks of the reference, as job-level config
@@ -334,8 +342,7 @@ def main(argv=None):
             tag=args.inject_tag, location=args.location,
             ts_format=args.ts_format, ts_format_len=args.ts_format_len,
             default_year=args.default_year)
-        stats = run_pipeline(spark, src, args.out, cfg=cfg,
-                             num_partitions=args.partitions)
+        stats = run_pipeline(spark, src, args.out, cfg=cfg)
     print(json.dumps(stats, default=str))
 
 

@@ -4580,9 +4580,13 @@ def _fixture_blocklist_domains(spark, sf) -> list:
 def _fixture_blocklist(spark, sf) -> DataFrame:
     """Fixture blocklist as a DIM TABLE (bl_domain string) — the shape a
     production run passes in."""
-    return spark.createDataFrame(
-        [(d,) for d in _fixture_blocklist_domains(spark, sf)],
-        "bl_domain string")
+    import pyarrow as pa
+
+    # typed Arrow, not a Python list: a JVM-side LocalTableScan, so the
+    # broadcast build runs no Python task
+    return spark.createDataFrame(pa.table(
+        {"bl_domain": pa.array(_fixture_blocklist_domains(spark, sf),
+                               pa.string())}))
 
 
 def url_domain_topk(spark, sf, blocklist: DataFrame | None = None):

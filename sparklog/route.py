@@ -4,8 +4,12 @@ plus the token-array equality audit.
 Hostname/source distributions are Zipf-skewed at scale; writing
 ``partitionBy(rfc, severity_class)`` without salting funnels hot sinks
 through few tasks.  We salt with ``pmod(xxhash64(doc_id), S)`` —
-deterministic (no rand()) so a resumed run reproduces byte-identical
-partitioning, which keeps the manifest/resume layer idempotent.
+deterministic (no rand()) so a resumed run reproduces the same rows per
+sink, which keeps the manifest/resume layer idempotent.  The routing
+shuffle carries no fixed width: AQE sizes it from the measured map
+output (at most ``spark.sql.shuffle.partitions`` tasks, coalesced when
+the data is small), and the salt still spreads a hot sink over every
+task that width leaves.
 """
 
 from __future__ import annotations
@@ -25,24 +29,28 @@ def with_route_columns(df: DataFrame) -> DataFrame:
     )
 
 
-def salted_repartition(df: DataFrame, num_partitions: int,
+def salted_repartition(df: DataFrame, num_partitions: int | None = None,
                        salt_buckets: int = 16) -> DataFrame:
-    """Co-partition by sink key + deterministic salt to split hot sinks."""
-    return df.repartition(
-        num_partitions,
-        F.col("rfc"), F.col("sink_class"),
-        F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)),
-    )
+    """Co-partition by sink key + deterministic salt to split hot sinks.
+    With ``num_partitions=None`` the exchange is a count-free
+    ``REPARTITION_BY_COL`` that AQE may coalesce; an explicit width is a
+    ``REPARTITION_BY_NUM`` that AQE leaves as it is."""
+    keys = (F.col("rfc"), F.col("sink_class"),
+            F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)))
+    if num_partitions is None:
+        return df.repartition(*keys)
+    return df.repartition(num_partitions, *keys)
 
 
-def write_sinks(df: DataFrame, out_dir: str, num_partitions: int = 32) -> None:
+def write_sinks(df: DataFrame, out_dir: str) -> None:
     """Single-pass fan-out: one write partitioned by sink key.
 
-    At cluster scale this is one shuffle (the salted repartition) followed
-    by a dynamic-partition write; no N-pass filtered rewrites of the fact
-    table.
+    One shuffle (the salted repartition, its width left to AQE) followed
+    by a dynamic-partition write: each write task emits one file per sink
+    key it holds, so a small job writes few files and a hot sink still
+    lands in several.  No N-pass filtered rewrites of the fact table.
     """
-    (salted_repartition(df, num_partitions)
+    (salted_repartition(df)
      .write.mode("overwrite")
      .partitionBy("rfc", "sink_class")
      .parquet(out_dir))

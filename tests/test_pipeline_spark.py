@@ -113,7 +113,7 @@ def test_full_pipeline_and_audit(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     fixtures.write_tokens_table(spark, fixtures.synth_lines(2000, seed=3),
                                 src_path, n_partitions=4)
-    stats = run_pipeline(spark, src_path, out_dir, num_partitions=4)
+    stats = run_pipeline(spark, src_path, out_dir)
     assert stats["rows"] == 2000
     assert stats["n_failed"] > 0          # dead-letter path exercised
     # the stats come from committed stage counts: check them against a
@@ -149,14 +149,50 @@ def test_resume_after_kill_is_idempotent(spark, tmp_path):
 
     out_a = str(tmp_path / "out_a")
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_pipeline(spark, src_path, out_a, num_partitions=2,
-                     fail_after="sinks")
-    stats = run_pipeline(spark, src_path, out_a, num_partitions=2)
+        run_pipeline(spark, src_path, out_a, fail_after="sinks")
+    stats = run_pipeline(spark, src_path, out_a)
     assert stats["resumed_stages"] == ["sinks"]
 
     out_b = str(tmp_path / "out_b")
-    run_pipeline(spark, src_path, out_b, num_partitions=2)
+    run_pipeline(spark, src_path, out_b)
     assert sink_digest(out_a) == sink_digest(out_b)
+
+
+def test_hot_sink_is_salted_across_aqe_sized_routing(spark, tmp_path):
+    """The routing shuffle has no fixed width; with AQE sizing it from
+    the map output, the salt still spreads a hot sink key over several
+    write tasks.  AQE's minimum coalesced partition size (1 MB) is scaled
+    down with the input (~300 KB of map output), so this small job stands
+    in for one whose map output spans several cores' worth of it."""
+    import numpy as np
+
+    n = 4000
+    pdf = fixtures.synth_lines(n, seed=11)
+    hot = np.arange(n) % 20 < 17                  # 85% of all rows
+    pdf.loc[hot, "raw"] = [
+        f"<14>1 2025-10-11T22:14:15.{i % 1000:03d}Z host1 app {i} ID1 - "
+        f"event {i}" for i in np.flatnonzero(hot)]
+    src_path = str(tmp_path / "tokens")
+    out_dir = str(tmp_path / "out")
+    fixtures.write_tokens_table(spark, pdf, src_path, n_partitions=4)
+
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        stats = run_pipeline(spark, src_path, out_dir)
+    finally:
+        spark.conf.set(key, old)
+    assert stats["rows"] == n
+
+    sinks = spark.read.parquet(os.path.join(out_dir, "sinks"))
+    n_valid = sinks.where(F.col("parse_error").isNull()).count()
+    n_hot = sinks.where((F.col("rfc") == 2)
+                        & (F.col("sink_class") == "info")).count()
+    assert n_hot >= 0.8 * n_valid
+    hot_files = glob.glob(os.path.join(out_dir, "sinks", "rfc=2",
+                                       "sink_class=info", "*.parquet"))
+    assert len(hot_files) >= 2
 
 
 def test_injected_config_goldens_through_spark(spark, tmp_path):

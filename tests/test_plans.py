@@ -3,15 +3,19 @@
 
 - the parse UDF appears EXACTLY once per query plan (no accidental
   re-evaluation when struct fields feed filters/aggregates)
-- dim joins are broadcast (fact side never shuffles for enrichment)
+- dim joins are broadcast (fact side never shuffles for enrichment) over
+  JVM-side LocalTableScan dims (no Python task builds a broadcast)
+- the routing shuffle carries no fixed width, so AQE can size it
 - parquet scans prune columns (count-only paths must not read tokens)
 """
 
 from pyspark.sql import functions as F
 
 from sparklog import fixtures
-from sparklog.enrich import enrich
+from sparklog.enrich import dim_facility, dim_host, dim_severity, enrich
 from sparklog.pipeline import parse_stage
+from sparklog.route import salted_repartition, with_route_columns
+from sparklog.udfs import MAP_IN_ARROW_SCHEMA
 
 
 def _plan(df) -> str:
@@ -46,6 +50,44 @@ def test_enrich_joins_are_broadcast(spark, tmp_path):
     plan = _plan(enriched)
     assert plan.count("BroadcastHashJoin") == 3
     assert "SortMergeJoin" not in plan
+    assert plan.count("LocalTableScan") == 3      # the three build sides
+
+
+def test_constant_tables_are_local_table_scans(spark, monkeypatch):
+    """The dims and the fixture blocklist are Arrow-built: a Python-list
+    DataFrame plans as ``Scan ExistingRDD`` and runs Python tasks every
+    time it is scanned."""
+    from sparklog import queries
+
+    monkeypatch.setattr(queries, "_fixture_blocklist_domains",
+                        lambda spark, sf: ["evil.example"])
+    fact = {f.name: f.dataType for f in MAP_IN_ARROW_SCHEMA.fields}
+    for df, key in ((dim_facility(spark), "facility"),
+                    (dim_severity(spark), "severity"),
+                    (dim_host(spark), "hostname"),
+                    (queries._fixture_blocklist(spark, None), None)):
+        plan = _plan(df)
+        assert plan.startswith("LocalTableScan"), plan
+        assert "ExistingRDD" not in plan
+        # dim keys typed like the parsed columns: no cast on either side
+        assert key is None or df.schema[key].dataType == fact[key], key
+
+
+def test_routing_exchange_is_aqe_sized(spark, tmp_path):
+    """salted_repartition without a width plans a count-free
+    REPARTITION_BY_COL exchange (AQE may coalesce it); an explicit width
+    is still honoured."""
+    src_path = str(tmp_path / "tokens")
+    fixtures.write_tokens_table(spark, fixtures.synth_lines(200, seed=4),
+                                src_path, n_partitions=1)
+    routed = with_route_columns(
+        enrich(parse_stage(spark.read.parquet(src_path)), spark))
+    plan = _plan(salted_repartition(routed))
+    assert "REPARTITION_BY_COL" in plan
+    assert "REPARTITION_BY_NUM" not in plan
+    fixed = salted_repartition(routed, 7)
+    assert "REPARTITION_BY_NUM" in _plan(fixed)
+    assert fixed.rdd.getNumPartitions() == 7
 
 
 def test_column_pruning_reaches_scan(spark, tmp_path):
